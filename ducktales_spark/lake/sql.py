@@ -3,73 +3,60 @@
 The reference's entire user surface is SQL strings driven through
 ``conn.execute(...)`` (``utils/ducklake_utils.py:53``; every demo) — DDL,
 DML, transactions, and reads. This module gives ``LakeCatalog.sql()`` the
-same statement coverage so a reference user can port scripts verbatim:
+same statement coverage so a reference user can port scripts verbatim.
 
-* ``BEGIN [TRANSACTION]`` / ``COMMIT`` / ``ROLLBACK``
+The verb table ``_VERBS`` (end of module) IS the dispatch: an ordered list
+of (label, pattern, handler, flags) whose first match handles a statement.
+Its groups, one bullet each:
+
+* transactions — ``BEGIN [TRANSACTION]`` / ``COMMIT`` / ``ROLLBACK``
   (demos/01_transaction_rollback/demo.py:85-104)
-* ``USE <catalog>`` (demo.py:30) — accepted, single-catalog no-op
-* ``CREATE TABLE t (col TYPE [PRIMARY KEY] [NOT NULL] [DEFAULT lit], ...)``
-  (demo.py:33-55)
-* ``CREATE [OR REPLACE] TABLE t AS <select>`` (utils/ducklake_utils.py:101-111)
-* ``CREATE [OR REPLACE] VIEW v AS <select>``
-  (demos/03_schema_evolution/demo.py:273-288)
-* ``CREATE [OR REPLACE] MATERIALIZED VIEW mv AS SELECT ...`` /
-  ``REFRESH MATERIALIZED VIEW mv`` / ``DROP MATERIALIZED VIEW mv`` —
-  the continuous-aggregate tier (:mod:`ducktales_spark.lake.rollup`)
-  behind SQL, completing the reference's conn.execute()-everything
-  ergonomics. The SELECT must be the incrementally-maintainable subset:
-  ``SELECT <keys...>, [time_bucket(INTERVAL '1 hour', ts),]
-  COUNT(*)/COUNT(col)/COUNT(DISTINCT col)/APPROX_COUNT_DISTINCT(col)/
-  SUM/AVG/MIN/MAX/STDDEV/VARIANCE(col)... FROM <lake table> [WHERE <pred over source
-  columns, no subqueries>] GROUP BY ... [HAVING <pred over the selected
-  aggregates/keys>]`` — no JOIN (the same restriction TimescaleDB
-  continuous aggregates and Materialize place on their incremental
-  paths; the WHERE is maintainable because CDC diff rows carry the
-  predicate columns — the reference's own summary-view pattern filters
-  rows, demos/03_schema_evolution/demo.py:273-288 — and the HAVING is a
-  READ-TIME group filter over the maintained face, so state for a group
-  that dips below the threshold is never lost). Reads of
-  the MV go through :func:`~ducktales_spark.lake.rollup.read_rollup`, so
-  ``SELECT avg_<c> FROM mv`` works without hand-dividing and
-  ``approx_distinct_<c>`` reads as the HLL estimate, never raw sketch
-  bytes.
-* ``DROP TABLE / DROP VIEW``
-* ``ALTER TABLE t ADD COLUMN c TYPE [DEFAULT lit]`` / ``DROP COLUMN`` /
-  ``RENAME COLUMN a TO b`` / ``ALTER COLUMN c SET NOT NULL``
-  (demos/03_schema_evolution/demo.py:118,195,196,221) /
-  ``ALTER COLUMN c [SET DATA] TYPE t`` (widening casts only —
-  README.md:50 claims type changes; old files cast at read time)
-* ``INSERT INTO t [(cols)] VALUES (...), (...)`` (demo 01:58-66) and
-  ``INSERT INTO t [(cols)] <select>`` (demos/02_time_travel/demo.py:228-235);
-  ``INSERT OR REPLACE|IGNORE INTO`` (DuckDB's ON CONFLICT shorthands,
-  upsert/skip by PRIMARY KEY via the MERGE machinery)
-* ``UPDATE t SET a = expr [, ...] [WHERE pred]`` (demo 01:96-102)
-* ``DELETE FROM t [WHERE pred]`` (demos/02_time_travel/demo.py:112) and
-  ``TRUNCATE [TABLE] t`` (DuckDB's spelling of the metadata-only full
-  delete)
-* ``COPY <table|(subquery)> TO '<path>' [(FORMAT PARQUET|CSV, ...)]`` —
-  DuckDB's export verb: ``*.parquet``/``*.csv`` paths write ONE file
-  (coalesced, DuckDB parity), any other path writes a directory of part
-  files (the distributed scale path) — and its inverses: ``COPY t FROM
-  '<path>'`` (transactional file ingestion through the normal insert
-  path) and the ``read_parquet('path')`` / ``read_csv('path')`` table
-  functions (files, part-file directories, or globs; csv auto-detects
-  header + types like DuckDB)
-* ``ATTACH '<path>' AS name`` / ``DETACH name`` — bind a SECOND lake
-  catalog for qualified ``name.table`` reads (the reference's
-  side-by-side dev/prod migration, utils/ducklake_utils.py:27,
-  demos/05_catalog_portability/demo.py:194-299), and ``COPY FROM
-  DATABASE a TO b`` (DuckDB's whole-catalog migration verb; ``main``
-  names the bound catalog). Attached catalogs are read-only through
-  this executor — writes name the bound catalog unqualified.
-* anything else -> read query via Catalyst, with the ``AT (VERSION|TIMESTAMP
-  =>)`` time-travel rewrite (README.md:216-220)
+* the attach list — ``ATTACH '<path>' AS name [(READ_ONLY, DATA_PATH
+  '<dir>')]`` / ``DETACH`` / ``USE <attached|main>`` (switches the default
+  catalog) / ``SHOW DATABASES`` / ``COPY FROM DATABASE a TO b``
+  (demos/05_catalog_portability/demo.py:194-299)
+* database files — ``EXPORT DATABASE '<dir>' [(FORMAT PARQUET|CSV)]`` /
+  ``IMPORT DATABASE '<dir>'`` (DuckDB's portability pair)
+* materialized views — ``CREATE [OR REPLACE] MATERIALIZED VIEW mv AS SELECT
+  ...`` / ``REFRESH`` / ``DROP``: the continuous-aggregate tier of
+  :mod:`ducktales_spark.lake.rollup` (its incrementally-maintainable SELECT
+  subset is documented at :meth:`SQLExecutor._parse_mv_select`)
+* views and tables — ``CREATE [OR REPLACE] VIEW``, CTAS ``CREATE [OR
+  REPLACE] TABLE t [PARTITION BY (c)] AS <select>``, ``CREATE TABLE [IF NOT
+  EXISTS] t (col TYPE [PRIMARY KEY] [NOT NULL] [DEFAULT lit], ...)
+  [PARTITION BY (c)]``, ``DROP TABLE|VIEW [IF EXISTS]``, ``ALTER TABLE t
+  ADD|DROP|RENAME COLUMN``, ``ALTER COLUMN c SET NOT NULL | [SET DATA] TYPE
+  t`` (widening only), ``SET|RESET PARTITIONED BY | ZORDER BY``
+  (demos/03_schema_evolution/demo.py)
+* introspection — ``SUMMARIZE <table|select>``, ``DESCRIBE <table|query>``,
+  ``PRAGMA table_info(t)``, ``SHOW TABLES`` / ``PRAGMA show_tables``
+* DML — ``CHECKPOINT [name | cat.t]``, ``INSERT [OR REPLACE|IGNORE] INTO t
+  [(cols)] VALUES ... | <select>``, ``UPDATE t SET ... [WHERE]``, ``DELETE
+  FROM t [WHERE]``, ``TRUNCATE [TABLE] t``, ``MERGE [WITH SCHEMA EVOLUTION]
+  INTO t USING ... WHEN ...`` (demo 01:58-102, demos/02_time_travel)
+* procedures — ``CALL expire_snapshots | compact | optimize | flush_inlined
+  | gc | add_retention_policy | build_vector_index | extend_vector_index |
+  remove_vectors | probe_vector_index (...)`` and the DuckLake
+  ``ducklake_*`` spellings
+* files — ``COPY <table|(subquery)> TO '<path>' [(...)]`` (one file for
+  ``*.parquet``/``*.csv``, else a part-file directory) and ``COPY t FROM
+  '<path>' [(...)]``; ``read_parquet('path')`` / ``read_csv('path', ...)``
+  table functions work inside any query
+* anything else — a read query via Catalyst, with the ``AT
+  (VERSION|TIMESTAMP =>)`` time-travel rewrite (README.md:216-220) and the
+  ``ducklake_*`` metadata table functions
 
-Statement heads are dispatched with regexes; every *query body* (SELECT in
-CTAS/INSERT/VIEW, VALUES lists, SET/WHERE expressions) is handed to Spark
-SQL — we never re-implement expression parsing, so the full Catalyst surface
-is available inside each statement. Inside an open transaction, reads see
-read-your-writes (touched tables bind to the transaction's staged state).
+Every table name a write or DESCRIBE takes may be catalog-qualified
+(``cat.t``): ``SQLExecutor._resolve`` maps the qualifier to this catalog
+(``main`` or the executor's own alias) or an attached one, and refuses
+writes into a READ_ONLY attachment. Attached catalogs are writable:
+qualified INSERT/CTAS/UPDATE/DELETE/DDL/MERGE/CHECKPOINT/CALL run in them.
+
+Every *query body* (SELECT in CTAS/INSERT/VIEW, VALUES lists, SET/WHERE
+expressions) is handed to Spark SQL — we never re-implement expression
+parsing, so the full Catalyst surface is available inside each statement.
+Inside an open transaction, reads see read-your-writes (touched tables
+bind to the transaction's staged state).
 """
 
 from __future__ import annotations
@@ -92,17 +79,22 @@ class LakeSQLError(Exception):
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
-# The qualified-write verb grammar, shared by the dispatch that routes
-# `<verb> <cat>.<tbl>` into attached catalogs and the USE-READ_ONLY
-# bypass that lets writes aimed at OTHER catalogs delegate — one
-# alternation so the two can never drift (MERGE and CHECKPOINT dispatch
-# separately but join the bypass pattern below).
-_QWRITE_VERBS = (
-    r"INSERT(?:\s+OR\s+(?:REPLACE|IGNORE))?\s+INTO|UPDATE"
-    r"|DELETE\s+FROM|TRUNCATE(?:\s+TABLE)?"
-    r"|CREATE\s+(?:OR\s+REPLACE\s+)?TABLE(?:\s+IF\s+NOT\s+EXISTS)?"
-    r"|DROP\s+TABLE(?:\s+IF\s+EXISTS)?|ALTER\s+TABLE"
-)
+# An optionally catalog-qualified table name, `[cat.]name`: the verb table
+# hands the `cat` group to SQLExecutor._resolve.
+_T = rf"(?:(?P<cat>{_IDENT})\s*\.\s*)?(?P<name>{_IDENT})"
+
+# Verb-table entry flags (see _VERBS at the end of the module):
+# _MUTATES — writes its target catalog: resolved as a write (a READ_ONLY
+# target is refused) and snapshotted for statement atomicity inside BEGIN;
+# _SELF_COMMITS — commits snapshots (or external files) of its own, so it
+# is refused inside BEGIN; _LOCAL — manages this executor's attach list,
+# so it runs here even under `USE <attached>`.
+_MUTATES, _SELF_COMMITS, _LOCAL = 1, 2, 4
+
+
+def _col_list(s) -> list:
+    """``'a, b'`` -> ``['a', 'b']``; None -> ``[]``."""
+    return [c.strip() for c in (s or "").split(",") if c.strip()]
 
 # reference (DuckDB) type -> Spark DDL type string (SURVEY.md §1.2)
 _TYPE_MAP = {
@@ -332,12 +324,14 @@ class SQLExecutor:
         # O(#MVs x versions)
         self._mv_cols = {}
         # ATTACH'd secondary catalogs: lowercased name -> LakeCatalog.
-        # Session-scoped like DuckDB's ATTACH; read via qualified
-        # name.table references, written via qualified-target DML
-        # (_attached_write), migrated via COPY FROM DATABASE.
+        # Session-scoped like DuckDB's ATTACH; every qualifier naming one
+        # resolves through _resolve.
         self._attached = {}
-        # lazily-built delegate executors for attached-catalog writes
+        # lazily-built delegate executors, one per attached name
         self._att_sql = {}
+        # the name unqualified statements resolve to: 'main' here, the
+        # attach alias in a delegate executor
+        self._alias = "main"
         # `USE <attached>` default-catalog selection (None = bound catalog)
         self._use = None
         # names attached with (READ_ONLY): writes into them raise
@@ -366,788 +360,362 @@ class SQLExecutor:
 
     # ------------------------------------------------------------------
     def execute(self, sql: str, version=None) -> DataFrame:
-        """Statement dispatch, with STATEMENT-LEVEL ATOMICITY inside an
-        explicit transaction (Postgres/DuckDB semantics): a statement that
-        raises restores the transaction's staging buffers to their
-        pre-statement state, so a later COMMIT can never persist the
-        partial effects of a failed statement (e.g. schema evolution a
-        failed MERGE WITH SCHEMA EVOLUTION had staged). Snapshot/restore
-        is pure driver-side metadata — no Spark job."""
+        return self._dispatch(_strip(sql), version)
+
+    def _dispatch(self, q: str, version=None) -> DataFrame:
+        """Run one stripped statement: the first ``_VERBS`` entry whose
+        pattern matches handles it; anything else is a read query.
+
+        * Under ``USE <attached>`` every statement except the attach-list
+          verbs (``_LOCAL``) runs wholesale in the default catalog's
+          delegate executor — unqualified names, DML/DDL and BEGIN/COMMIT
+          all operate there, DuckDB's default-catalog semantics.
+        * ``_SELF_COMMITS`` entries are refused inside BEGIN.
+        * A ``_MUTATES`` entry resolves its target (the ``cat`` group, the
+          default catalog when absent) as a write, so a READ_ONLY target
+          raises before anything runs. Inside an explicit transaction it
+          gets STATEMENT-LEVEL ATOMICITY (Postgres/DuckDB semantics): a
+          statement that raises restores the transaction's staging
+          buffers to their pre-statement state, so a later COMMIT can
+          never persist the partial effects of a failed statement (e.g.
+          schema evolution a failed MERGE WITH SCHEMA EVOLUTION had
+          staged). Snapshot/restore is pure driver-side metadata — no
+          Spark job; reads skip it, so a SELECT-heavy interactive txn
+          pays no deepcopy per read.
+
+        A handler gets the match and the target executor and returns its
+        result frame, or the affected row count (None = 0), which becomes
+        the ``(op, rows)`` status row named by the entry's label."""
+        for label, pat, handler, flags in _VERBS:
+            m = pat.match(q)
+            if m:
+                break
+        else:
+            handler, flags = None, 0
+        if self._use is not None and not flags & _LOCAL:
+            dex = self._resolve(self._use)
+            if dex is not None:
+                return dex._dispatch(q, version)
+            self._use = None  # DETACH'd underneath
+        if handler is None:
+            return self._query(q, version)
+        if flags & _SELF_COMMITS:
+            self._no_txn(label)
+        cat = m.groupdict().get("cat")
+        dex = self._resolve(cat, write=bool(flags & _MUTATES))
+        if dex is None:
+            if flags & _MUTATES:
+                raise LakeSQLError(f"no attached catalog named {cat!r}")
+            # a read's unknown qualifier is the bound catalog's own mount
+            # alias (exploration/ducklake_analysis.sh:194 `DESCRIBE
+            # lake.sales_data`)
+            dex = self
         tx = self._tx
-        if tx is None or re.match(
-            # txn verbs manage the txn themselves; read-only statements
-            # cannot mutate staging, so they skip the snapshot — a
-            # SELECT-heavy interactive txn must not pay O(loaded file
-            # entries) deepcopy per read
-            r"^(BEGIN|COMMIT|ROLLBACK|SELECT|WITH|SHOW|DESCRIBE|DESC"
-            r"|EXPLAIN|SUMMARIZE)\b",
-            _strip(sql),
-            re.I,
-        ):
-            return self._execute_stmt(sql, version)
-        snap = tx._snapshot_staging()
+        snap = (
+            tx._snapshot_staging()
+            if tx is not None and flags & _MUTATES
+            else None
+        )
         try:
-            return self._execute_stmt(sql, version)
+            out = handler(self, m, dex)
         except BaseException:
-            if self._tx is tx:  # txn still open: undo this statement only
-                tx._restore_staging(snap)
+            if snap is not None and self._tx is tx:
+                tx._restore_staging(snap)  # undo this statement only
             raise
+        if isinstance(out, DataFrame):
+            return out
+        return self._status(label, out or 0)
 
-    def _execute_stmt(self, sql: str, version=None) -> DataFrame:
-        q = _strip(sql)
+    def _resolve(self, cat=None, write: bool = False):
+        """The one qualifier rule every verb goes through: ``cat`` (None =
+        unqualified) -> the executor owning that catalog, or None when the
+        name is neither attached nor ``main`` (each verb decides what an
+        unknown name means).
 
-        # `USE <attached>` in effect: every statement except the
-        # catalog-management verbs delegates wholesale to the default
-        # catalog's sub-executor — unqualified names, DML/DDL, and
-        # BEGIN/COMMIT all operate there, DuckDB's default-catalog
-        # semantics. USE/ATTACH/DETACH stay here; COPY FROM DATABASE
-        # too — its operands name catalogs from the attach list, which
-        # only this executor owns (the delegate would see neither side).
-        if self._use is not None and not re.match(
-            r"^(USE|ATTACH|DETACH|SHOW\s+DATABASES"
-            r"|COPY\s+FROM\s+DATABASE)\b",
-            q,
-            re.I,
-        ):
-            if self._use not in self._attached:  # DETACH'd underneath
-                self._use = None
-            else:
-                if self._use in self._att_readonly and (
-                    re.match(
-                        # CALL is a write verb EXCEPT probe_vector_index,
-                        # the one pure-read procedure — it delegates like
-                        # SUMMARIZE/DESCRIBE instead of being refused
-                        r"^(INSERT|UPDATE|DELETE|TRUNCATE|MERGE|CREATE"
-                        r"|DROP|ALTER|IMPORT|CHECKPOINT"
-                        r"|CALL(?!\s+probe_vector_index\b)|REFRESH)\b",
-                        q,
-                        re.I,
-                    )
-                    or re.match(
-                        rf"^COPY\s+{_IDENT}\s+FROM\b", q, re.I
-                    )
-                ):
-                    # a QUALIFIED write naming a DIFFERENT catalog is not
-                    # a write into the read-only default — let it
-                    # delegate; the delegate's own dispatch enforces the
-                    # actual target's read-only flag. Self-qualified
-                    # (and unqualifiable verbs like IMPORT/REFRESH/CALL)
-                    # stay refused here.
-                    mq = re.match(
-                        rf"^(?:{_QWRITE_VERBS}"
-                        rf"|MERGE(?:\s+WITH\s+SCHEMA\s+EVOLUTION)?\s+INTO"
-                        rf"|CHECKPOINT)\s+({_IDENT})\s*\.",
-                        q,
-                        re.I,
-                    )
-                    if mq is None:
-                        # dotless whole-catalog CHECKPOINT of a SIBLING
-                        # attachment also delegates — but only when the
-                        # name is not a table in the read-only default
-                        # (the delegate resolves that tie to the table)
-                        mc = re.match(
-                            rf"^CHECKPOINT\s+({_IDENT})$", q, re.I
-                        )
-                        # 'main' (the bound catalog) is reserved and never
-                        # in the attach list, but the bound catalog is
-                        # writable — CHECKPOINT main must delegate exactly
-                        # like CHECKPOINT main.t / INSERT INTO main.t do
-                        # (r13 ADVICE: it was refused here)
-                        if (
-                            mc is not None
-                            and (
-                                mc.group(1).lower() in self._attached
-                                or mc.group(1).lower() == "main"
-                            )
-                            and not self._att_executor(
-                                self._use
-                            )._table_exists(mc.group(1))
-                        ):
-                            mq = mc
-                    if mq is None:
-                        # a CALL whose target is qualified away from the
-                        # read-only default (CALL compact(dev.t) / CALL
-                        # expire_snapshots(catalog => 'dev')) delegates
-                        # too — the delegate's CALL routing enforces the
-                        # actual target's read-only flag
-                        mcall = re.match(
-                            rf"^CALL\s+{_IDENT}\s*\(\s*'?({_IDENT})\s*\.",
-                            q,
-                            re.I,
-                        )
-                        if mcall is None and re.match(
-                            r"^CALL\b", q, re.I
-                        ):
-                            # catalog => 'x' routing exists only on CALL
-                            # verbs; scanning other statements would let a
-                            # write whose STRING LITERALS contain that
-                            # token sequence delegate instead of being
-                            # refused here (r14 ADVICE)
-                            mcall = re.search(
-                                rf"\bcatalog\s*=>\s*'({_IDENT})'", q, re.I
-                            )
-                        if mcall is not None:
-                            mq = mcall
-                    if mq is None or mq.group(1).lower() == self._use:
-                        raise LakeSQLError(
-                            f"catalog {self._use!r} is attached READ_ONLY"
-                        )
-                return self._att_executor(self._use).execute(
-                    sql, version
-                )
+        No qualifier and this executor's own alias resolve to ``self``: the
+        unqualified statement has the exact semantics, open-transaction
+        staging included. ``main`` names the bound catalog everywhere — a
+        delegate inherits it in its attach list, so ``main.t`` means the
+        same thing at every delegation depth. An attached name resolves to
+        its lazily-built delegate executor, which sees the SAME attach
+        list (refreshed on every resolution, so ATTACH/DETACH changes
+        propagate): under ``USE prod``, ``dev.t`` and ``main.t`` keep
+        resolving, DuckDB's attach-list semantics.
 
-        if re.match(r"^BEGIN(\s+TRANSACTION)?$", q, re.I):
-            if self._tx is not None:
-                raise LakeSQLError("transaction already open")
-            self._tx = self.c.transaction()
-            return self._status("BEGIN", 0)
-        if re.match(r"^COMMIT$", q, re.I):
-            if self._tx is None:
-                raise LakeSQLError("no open transaction")
-            tx, self._tx = self._tx, None
-            v = tx.commit()
-            return self._status("COMMIT", v)
-        if re.match(r"^ROLLBACK$", q, re.I):
-            if self._tx is None:
-                raise LakeSQLError("no open transaction")
-            tx, self._tx = self._tx, None
-            tx.rollback()
-            return self._status("ROLLBACK", 0)
-        m = re.match(rf"^USE\s+({_IDENT})$", q, re.I)
-        if m:
-            # DuckDB's default-catalog switch, the reference migration
-            # flow's spelling (demos/05_catalog_portability/demo.py:200,
-            # 212 `USE dev` / `USE prod`): an ATTACH'd name becomes the
-            # default for subsequent unqualified statements (each
-            # delegated wholesale to that catalog's sub-executor,
-            # including its own BEGIN/COMMIT state); any other name —
-            # the bound catalog under whatever alias the user mounted it
-            # — resets to the bound catalog.
-            key = m.group(1).lower()
-            if key != self._use:
-                # switching away while the CURRENT default's sub-executor
-                # holds an open transaction would leave it dangling (a
-                # later USE back could land it; a DETACH would silently
-                # discard its staged writes) — refuse, like the main-txn
-                # guard on entering USE
-                cur = (
-                    self._att_sql.get(self._use)
-                    if self._use is not None
-                    else None
-                )
-                if cur is not None and cur._tx is not None:
-                    raise LakeSQLError(
-                        f"catalog {self._use!r} has an open transaction: "
-                        "COMMIT or ROLLBACK it before USE"
-                    )
-            if key in self._attached:
-                self._no_txn("USE <attached catalog>")
-                self._use = key
-            else:
-                self._use = None
-            return self._status("USE", 0)
+        A write refuses a READ_ONLY target (the delegate of a READ_ONLY
+        attachment refuses writes to itself, which is how ``USE``-defaulted
+        writes are refused) and, when it leaves this executor's catalog,
+        an open transaction here: the attached catalog autocommits, and a
+        transaction has one write target (DuckDB's cross-database rule)."""
+        key = (cat or self._alias).lower()
+        c = self._attached.get(key, self.c if key == "main" else None)
+        if c is None:
+            return None
+        if write and c is not self.c:
+            self._no_txn(f"write to attached catalog {cat!r}")
+        if write and key in self._att_readonly:
+            raise LakeSQLError(f"catalog {key!r} is attached READ_ONLY")
+        if c is self.c:
+            return self
+        dex = self._att_sql.get(key)
+        if dex is None:
+            dex = self._att_sql[key] = SQLExecutor(c)
+        shared = dict(self._attached)
+        # setdefault, not assignment: in a DELEGATE executor the inherited
+        # 'main' already names the top-level bound catalog
+        shared.setdefault("main", self.c)
+        dex._attached, dex._alias = shared, key
+        dex._att_readonly = set(self._att_readonly)
+        # drop delegate sub-executors whose name was re-bound to a
+        # different catalog (DETACH + ATTACH same alias, new path)
+        dex._att_sql = {
+            k: v for k, v in dex._att_sql.items() if shared.get(k) is v.c
+        }
+        return dex
 
-        m = re.match(r"^SUMMARIZE\s+(.+)$", q, re.I | re.S)
-        if m:
-            return self._summarize_stmt(m.group(1).strip())
+    # -- verb handlers: (self, m, dex) -> result frame | row count ---------
+    def _begin(self, m, dex):
+        if self._tx is not None:
+            raise LakeSQLError("transaction already open")
+        self._tx = self.c.transaction()
 
-        # -- multi-catalog verbs (demos/05_catalog_portability) ----------
-        m = re.match(
-            rf"^ATTACH\s+'((?:[^']|'')*)'\s+AS\s+({_IDENT})"
-            r"\s*(?:\((.*)\))?$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            read_only, data_path = False, None
-            for item in _split_top(m.group(3)) if m.group(3) else []:
-                mm = re.fullmatch(r"READ_ONLY", item, re.I)
-                if mm:
-                    read_only = True
-                    continue
-                mm = re.fullmatch(
-                    r"DATA_PATH\s+'((?:[^']|'')*)'", item, re.I
-                )
-                if mm:
-                    data_path = mm.group(1).replace("''", "'")
-                    continue
-                raise LakeSQLError(
-                    f"unknown ATTACH option {item!r} "
-                    "(READ_ONLY, DATA_PATH '<dir>')"
-                )
-            return self._attach_stmt(
-                m.group(1).replace("''", "'"),
-                m.group(2),
-                read_only=read_only,
-                data_path=data_path,
-            )
-        m = re.match(rf"^DETACH\s+({_IDENT})$", q, re.I)
-        if m:
-            return self._detach_stmt(m.group(1))
-        m = re.match(
-            rf"^COPY\s+FROM\s+DATABASE\s+({_IDENT})\s+TO\s+({_IDENT})$",
-            q,
-            re.I,
-        )
-        if m:
-            return self._copy_database_stmt(m.group(1), m.group(2))
-        m = re.match(
-            r"^EXPORT\s+DATABASE\s+'((?:[^']|'')*)'\s*"
-            r"(?:\(\s*FORMAT\s+(\w+)\s*\))?$",
-            q,
-            re.I,
-        )
-        if m:
-            return self._export_database(
-                m.group(1).replace("''", "'"), (m.group(2) or "PARQUET")
-            )
-        m = re.match(
-            r"^IMPORT\s+DATABASE\s+'((?:[^']|'')*)'$", q, re.I
-        )
-        if m:
-            return self._import_database(m.group(1).replace("''", "'"))
-        m = re.match(
-            rf"^({_QWRITE_VERBS})\s+"
-            rf"({_IDENT})\s*\.\s*({_IDENT})\b(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            qcat = m.group(2).lower()
-            target_c = self._attached.get(qcat)
-            if target_c is self.c or (target_c is None and qcat == "main"):
-                # the qualifier names THIS executor's own catalog —
-                # `main` in the top-level executor (the COPY FROM
-                # DATABASE convention), or a delegate's own alias under
-                # USE. Strip it: the unqualified statement has the exact
-                # semantics, including open-transaction staging.
-                return self.execute(
-                    f"{m.group(1)} {m.group(3)}{m.group(4)}", version
-                )
-            if target_c is not None:
-                return self._attached_write(
-                    m.group(1), m.group(2), m.group(3), m.group(4)
-                )
+    def _end_txn(self, m, dex):
+        """COMMIT (rows = the new snapshot id) / ROLLBACK."""
+        if self._tx is None:
+            raise LakeSQLError("no open transaction")
+        tx, self._tx = self._tx, None
+        return getattr(tx, m[0].lower())()
 
-        m = re.match(
-            rf"^CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+({_IDENT})"
-            r"\s+AS\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            return self._create_mv(
-                m.group(2), m.group(3), replace=bool(m.group(1))
-            )
-        m = re.match(
-            rf"^REFRESH\s+MATERIALIZED\s+VIEW\s+({_IDENT})$", q, re.I
-        )
-        if m:
-            return self._refresh_mv(m.group(1))
-        m = re.match(
-            rf"^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?({_IDENT})$",
-            q,
-            re.I,
-        )
-        if m:
-            return self._drop_mv(m.group(2), if_exists=bool(m.group(1)))
-
-        m = re.match(
-            rf"^CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+({_IDENT})\s+AS\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            replace, name, body = m.group(1), m.group(2), m.group(3)
-            if not replace and self._view_exists(name):
-                raise LakeSQLError(f"view {name!r} exists")
-            self._run(lambda tx: tx.create_view(name, body))
-            return self._status("CREATE VIEW", 0)
-
-        m = re.match(
-            rf"^CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+({_IDENT})"
-            rf"(?:\s+PARTITION\s+BY\s*\(([^()]+)\))?\s+AS\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:  # CTAS (S5), optionally range-clustered (X2)
-            replace, name, pby, body = (
-                m.group(1), m.group(2), m.group(3), m.group(4),
-            )
-            partition_by = (
-                [c.strip() for c in pby.split(",")] if pby else ()
-            )
-            df = self._query(body)
-            n = [0]
-
-            def op(tx):
-                st = tx._state(name, must_exist=False)
-                if replace and st is not None and not st.dropped:
-                    tx.drop_table(name)
-                n[0] = tx.ctas(name, df, partition_by=partition_by)
-
-            self._run(op)
-            # row count comes from the write itself (tx.ctas), not a second
-            # execution of the source query
-            return self._status("CREATE TABLE AS", n[0])
-
-        # the PARTITION BY variant first: a greedy coldef group with an
-        # OPTIONAL suffix would swallow the suffix into the coldefs
-        m = re.match(
-            rf"^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s*"
-            rf"\((.*)\)\s*PARTITION\s+BY\s*\(([^()]+)\)\s*$",
-            q,
-            re.I | re.S,
-        ) or re.match(
-            rf"^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s*"
-            rf"\((.*)\)()?\s*$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            if_not, name, cols, pby = (
-                m.group(1), m.group(2), m.group(3), m.group(4),
-            )
-            if self._table_exists(name):
-                if if_not:
-                    return self._status("CREATE TABLE", 0)
-                raise LakeSQLError(f"table {name!r} exists")
-            schema = self._parse_coldefs(cols)
-            partition_by = (
-                [c.strip() for c in pby.split(",")] if pby else ()
-            )
-            self._run(
-                lambda tx: tx.create_table(
-                    name, schema, partition_by=partition_by
-                )
-            )
-            return self._status("CREATE TABLE", 0)
-
-        m = re.match(rf"^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?({_IDENT})$", q, re.I)
-        if m:
-            if m.group(1) and not self._table_exists(m.group(2)):
-                return self._status("DROP TABLE", 0)
-            self._run(lambda tx: tx.drop_table(m.group(2)))
-            return self._status("DROP TABLE", 0)
-        m = re.match(rf"^DROP\s+VIEW\s+(IF\s+EXISTS\s+)?({_IDENT})$", q, re.I)
-        if m:
-            if m.group(1) and not self._view_exists(m.group(2)):
-                return self._status("DROP VIEW", 0)
-            self._run(lambda tx: tx.drop_view(m.group(2)))
-            return self._status("DROP VIEW", 0)
-
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+ADD\s+COLUMN\s+({_IDENT})\s+"
-            r"([A-Za-z0-9_]+(?:\s*\([^)]*\))?)"
-            r"(?:\s+DEFAULT\s+(.+?))?$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            t, c, typ, dflt = m.groups()
-            default = self._literal(dflt) if dflt is not None else None
-            self._run(lambda tx: tx.add_column(t, c, _map_type(typ), default))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+DROP\s+COLUMN\s+({_IDENT})$", q, re.I
-        )
-        if m:
-            self._run(lambda tx: tx.drop_column(m.group(1), m.group(2)))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+RENAME\s+COLUMN\s+({_IDENT})\s+TO\s+({_IDENT})$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.rename_column(*m.group(1, 2, 3)))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+ALTER\s+COLUMN\s+({_IDENT})\s+SET\s+NOT\s+NULL$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.set_not_null(m.group(1), m.group(2)))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+SET\s+PARTITIONED\s+BY\s*"
-            rf"\(([^()]*)\)\s*$",
-            q,
-            re.I,
-        )
-        if m:
-            t = m.group(1)
-            cols = [c.strip() for c in m.group(2).split(",") if c.strip()]
-            self._run(lambda tx: tx.set_partition_by(t, cols))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+RESET\s+PARTITIONED\s+BY$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.set_partition_by(m.group(1), ()))
-            return self._status("ALTER TABLE", 0)
-        # SET/RESET ZORDER BY — metadata-only spec edit (see
-        # Transaction.set_zorder_by); CALL optimize applies it, compact()
-        # re-applies it
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+SET\s+ZORDER\s+BY\s*"
-            rf"\(([^()]*)\)\s*$",
-            q,
-            re.I,
-        )
-        if m:
-            t = m.group(1)
-            cols = [c.strip() for c in m.group(2).split(",") if c.strip()]
-            self._run(lambda tx: tx.set_zorder_by(t, cols))
-            return self._status("ALTER TABLE", 0)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+RESET\s+ZORDER\s+BY$",
-            q,
-            re.I,
-        )
-        if m:
-            self._run(lambda tx: tx.set_zorder_by(m.group(1), ()))
-            return self._status("ALTER TABLE", 0)
-        # ALTER COLUMN c TYPE T / SET DATA TYPE T (widening casts only —
-        # the reference's "change data types" claim, README.md:50)
-        m = re.match(
-            rf"^ALTER\s+TABLE\s+({_IDENT})\s+ALTER\s+COLUMN\s+({_IDENT})\s+"
-            r"(?:SET\s+DATA\s+)?TYPE\s+([A-Za-z0-9_]+(?:\s*\([^)]*\))?)$",
-            q,
-            re.I,
-        )
-        if m:
-            t, c, typ = m.groups()
-            self._run(
-                lambda tx: tx.alter_column_type(t, c, _map_type(typ))
-            )
-            return self._status("ALTER TABLE", 0)
-
-        # optionally catalog-qualified (exploration/ducklake_analysis.sh:194
-        # `DESCRIBE lake.sales_data`): a qualifier naming an ATTACH'd
-        # catalog describes THAT catalog's table (r12); any other
-        # qualifier is the bound catalog's own alias and is ignored
-        m = re.match(
-            rf"^(?:DESCRIBE|DESC)\s+(?:({_IDENT})\.)?({_IDENT})$", q, re.I
-        )
-        if m:  # demos/03_schema_evolution/demo.py:112,124
-            cat, name = m.groups()
-            if cat and cat.lower() in self._attached:
-                return self._att_executor(cat)._describe(name)
-            return self._describe(name)
-        m = re.match(
-            r"^(?:DESCRIBE|DESC)\s+((?:SELECT|WITH|FROM)\b.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            # DESCRIBE <query> (DuckDB): the query's resolved schema as
-            # rows — analysis only, nothing executes
-            df = self._query(m.group(1))
-            return self.c.spark.createDataFrame(
-                [
-                    (
-                        f.name,
-                        f.dataType.simpleString().upper(),
-                        "YES" if f.nullable else "NO",
-                        None,
-                        None,
-                        None,
-                    )
-                    for f in df.schema.fields
-                ],
-                "column_name string, column_type string, null string, "
-                "key string, default string, extra string",
-            )
-        m = re.match(
-            rf"^PRAGMA\s+table_info\s*\(\s*'?(?:({_IDENT})\.)?({_IDENT})'?"
-            r"\s*\)$",
-            q,
-            re.I,
-        )
-        if m:  # DuckDB/SQLite spelling of DESCRIBE; qualifier as above
-            cat, name = m.groups()
-            if cat and cat.lower() in self._attached:
-                return self._att_executor(cat)._describe(name)
-            return self._describe(name)
-        if re.match(r"^PRAGMA\s+show_tables$", q, re.I):
-            return self._execute_stmt("SHOW TABLES")
-        m = re.match(
-            rf"^CHECKPOINT(?:\s+({_IDENT})(?:\s*\.\s*({_IDENT}))?)?$",
-            q,
-            re.I,
-        )
-        if m:
-            # DuckDB's CHECKPOINT flushes buffered WAL state to storage;
-            # the lake analogue is flushing catalog-inlined rows into
-            # parquet files (README.md:243 inlining). One table, all
-            # tables, one attached table (`CHECKPOINT att.t`), or a whole
-            # attached catalog (`CHECKPOINT att` — DuckDB's database
-            # argument; a LOCAL table of the same name wins the tie).
-            first, tbl = m.group(1), m.group(2)
-
-            def _delegate(cat: str, stmt: str) -> DataFrame:
-                if cat.lower() in self._att_readonly:
-                    raise LakeSQLError(
-                        f"catalog {cat!r} is attached READ_ONLY"
-                    )
-                return self._att_executor(cat).execute(stmt)
-
-            if tbl is not None:
-                key = (first or "").lower()
-                target_c = self._attached.get(key)
-                if target_c is self.c or (
-                    target_c is None and key == "main"
-                ):
-                    first, tbl = tbl, None  # self-qualified: local form
-                elif target_c is None:
-                    raise LakeSQLError(
-                        f"no attached catalog named {first!r}"
-                    )
-                else:
-                    return _delegate(first, f"CHECKPOINT {tbl}")
-            if (
-                tbl is None
-                and first
-                and not self._table_exists(first)
-                and first.lower() in self._attached
-            ):
-                return _delegate(first, "CHECKPOINT")
-            if (
-                tbl is None
-                and first
-                and first.lower() == "main"
-                and not self._table_exists(first)
-            ):
-                first = None  # CHECKPOINT main = the bound catalog, whole
-            names = [first] if first else list(self.c.tables())
-
-            def op(tx):
-                for t in names:
-                    tx.flush_inlined(t)
-
-            self._run(op)
-            return self._status("CHECKPOINT", len(names))
-        if re.match(r"^SHOW\s+DATABASES$", q, re.I):
-            # DuckDB's attach-list introspection: the bound catalog
-            # (spelled 'main', its USE-reset alias) plus every ATTACH'd
-            # name, with the read-only flag and the current default
-            rows = [("main", False, self._use is None)] + [
-                (n, n in self._att_readonly, n == self._use)
-                for n in sorted(self._attached)
-            ]
-            return self.c.spark.createDataFrame(
-                rows, "name string, read_only boolean, is_default boolean"
-            )
-        if re.match(r"^SHOW\s+TABLES$", q, re.I):
-            from .rollup import _meta_name
-
-            ts = set(self.c.tables())
-            # an MV's meta companion is an implementation detail: list the
-            # MV once (its meta stays directly readable/describable)
-            names = sorted(
-                n
-                for n in (ts | set(self.c.views()))
-                if not (
-                    n.endswith("__rollup_meta")
-                    and n[: -len("__rollup_meta")] in ts
-                    and _meta_name(n[: -len("__rollup_meta")]) == n
-                )
-            )
-            return self.c.spark.createDataFrame(
-                [(n,) for n in names], "name string"
-            )
-
-        m = re.match(
-            rf"^INSERT\s+(?:OR\s+(REPLACE|IGNORE)\s+)?INTO\s+({_IDENT})"
-            r"\s*(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            mode, name, body = m.groups()
-            cols = None
-            # a leading "(a, b, c)" identifier list is the column list; a
-            # leading "(SELECT ..." is a parenthesized query body
-            mm = re.match(r"^\(([^)]*)\)\s*(.*)$", body, re.S)
-            if mm and all(
-                re.fullmatch(_IDENT, c.strip())
-                for c in mm.group(1).split(",")
-            ):
-                cols = [c.strip() for c in mm.group(1).split(",")]
-                body = mm.group(2)
-            if re.match(r"^VALUES\b", body, re.I):
-                df = self.c.spark.sql(f"SELECT * FROM ({body})")
-                # VALUES yields col1..colN: name them from the column list,
-                # else positionally in table order
-                schema = self._schema_of(name)
-                names = cols or [
-                    f.name for f in schema.fields
-                ][: len(df.columns)]
-                # Cast each VALUES column to its TARGET column type before
-                # collecting: Spark types a bare `2.0` literal DECIMAL(2,1),
-                # and an un-cast Decimal stored in an inlined row would fail
-                # the read-side DataFrame build against a DOUBLE column.
-                types = {f.name: f.type for f in schema.fields}
-                from pyspark.sql import functions as F
-
-                df = df.toDF(*names).select(
-                    *[
-                        F.col(c).cast(types[c]).alias(c)
-                        if c in types
-                        else F.col(c)
-                        for c in names
-                    ]
-                )
-                if mode:
-                    return self._upsert_insert(name, df, mode)
-                # a literal VALUES plan is a LocalRelation — collect() is
-                # driver-side, so tiny inserts take insert_rows' no-Spark-job
-                # inlining fast path (sub-ms writes, README.md:243)
-                rows = [
-                    dict(zip(names, tup)) for tup in df.collect()
-                ]
-                self._run(lambda tx: tx.insert_rows(name, rows))
-                return self._status("INSERT", len(rows))
-            else:
-                df = self._query(body)
-                if cols is not None:
-                    if len(cols) != len(df.columns):
-                        raise LakeSQLError(
-                            f"column list has {len(cols)} names, query "
-                            f"produces {len(df.columns)} columns"
-                        )
-                    df = df.toDF(*cols)
-                if mode:
-                    return self._upsert_insert(name, df, mode)
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.insert(name, df)
-
-            self._run(op)
-            # count from the write itself — not a second source execution
-            return self._status("INSERT", n[0])
-
-        m = re.match(
-            rf"^UPDATE\s+({_IDENT})\s+SET\s+(.*)$",
-            q,
-            re.I | re.S,
-        )
-        if m:
-            name, rest = m.groups()
-            # split at the LAST top-level WHERE: a first-match split breaks
-            # SET expressions containing subqueries or 'where' in a literal
-            setlist, where = _split_last_where(rest)
-            # bind table views so scalar subqueries in SET/WHERE resolve
-            # (against pre-statement state, DuckDB UPDATE semantics)
-            self._bind_tables()
-            sets = {}
-            for part in _split_top(setlist):
-                mm = re.match(rf"^({_IDENT})\s*=\s*(.+)$", part, re.S)
-                if not mm:
-                    raise LakeSQLError(f"bad SET clause: {part!r}")
-                sets[mm.group(1)] = mm.group(2).strip()
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.update(name, sets, where)
-
-            self._run(op)
-            return self._status("UPDATE", n[0])
-
-        m = re.match(
-            rf"^DELETE\s+FROM\s+({_IDENT})(?:\s+WHERE\s+(.*))?$", q, re.I | re.S
-        )
-        if m:
-            name, where = m.groups()
-            self._bind_tables()  # subqueries in WHERE resolve pre-statement
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.delete(name, where)
-
-            self._run(op)
-            return self._status("DELETE", n[0])
-
-        m = re.match(rf"^TRUNCATE\s+(?:TABLE\s+)?({_IDENT})$", q, re.I)
-        if m:
-            # DuckDB's TRUNCATE spelling of the full-table DELETE: the
-            # engine's no-WHERE delete is metadata-only (files marked
-            # removed, no rewrite), so this is O(metadata) at any scale
-            name = m.group(1)
-            n = [0]
-
-            def op(tx):
-                n[0] = tx.delete(name, None)
-
-            self._run(op)
-            return self._status("TRUNCATE", n[0])
-
-        m = re.match(
-            r"^MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\b", q, re.I
-        )
-        if m:
-            evolve, rest = bool(m.group(1)), q[m.end():]
-            mm = re.match(
-                rf"^\s+({_IDENT})\s*\.\s*({_IDENT})\b(.*)$", rest, re.S
-            )
-            if mm:
-                qcat = mm.group(1).lower()
-                target_c = self._attached.get(qcat)
-                if target_c is self.c or (
-                    target_c is None and qcat == "main"
-                ):
-                    rest = " " + mm.group(2) + mm.group(3)
-                elif target_c is not None:
-                    return self._attached_merge(
-                        mm.group(1), mm.group(2), mm.group(3), evolve
-                    )
-            return self._merge_stmt("MERGE INTO" + rest, evolve=evolve)
-
-        m = re.match(rf"^CALL\s+({_IDENT})\s*\((.*)\)$", q, re.I | re.S)
-        if m:
-            return self._call_stmt(m.group(1), m.group(2))
-
-        if re.match(r"^COPY\b", q, re.I):
-            m = re.match(
-                rf"^COPY\s+(\(.*\)|{_IDENT})\s+TO\s+'((?:[^']|'')*)'"
-                r"\s*(?:\(\s*(.*?)\s*\))?$",
-                q,
-                re.I | re.S,
-            )
-            if m:
-                # external file writes are not transactional — refuse
-                # inside BEGIN like the other self-committing verbs
-                self._no_txn("COPY")
-                return self._copy_stmt(
-                    m.group(1), m.group(2).replace("''", "'"), m.group(3)
-                )
-            m = re.match(
-                rf"^COPY\s+({_IDENT})\s+FROM\s+'((?:[^']|'')*)'"
-                r"\s*(?:\(\s*(.*?)\s*\))?$",
-                q,
-                re.I | re.S,
-            )
-            if m:
-                # ingestion is an INSERT through the normal write path —
-                # transactional, composes with BEGIN
-                return self._copy_from_stmt(
-                    m.group(1), m.group(2).replace("''", "'"), m.group(3)
-                )
-            # a malformed COPY must fail IN-BAND, not fall through to
-            # _query and surface as an unrelated Catalyst parse error
+    def _use_stmt(self, m, dex):
+        """DuckDB's default-catalog switch, the reference migration flow's
+        spelling (demos/05_catalog_portability/demo.py:200,212 `USE dev` /
+        `USE prod`): an ATTACH'd name becomes the default for subsequent
+        unqualified statements (each delegated wholesale to that catalog's
+        delegate executor, including its own BEGIN/COMMIT state); any other
+        name — the bound catalog under whatever alias the user mounted it —
+        resets to the bound catalog."""
+        key = m["name"].lower()
+        cur = self._att_sql.get(self._use)
+        if key != self._use and cur is not None and cur._tx is not None:
+            # switching away would leave the default's open transaction
+            # dangling (a later USE back could land it; a DETACH would
+            # silently discard its staged writes)
             raise LakeSQLError(
-                "bad COPY statement: expected COPY <table|(subquery)> "
-                "TO '<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER, "
-                "OVERWRITE, PARTITION_BY (cols))] or COPY <table> FROM "
-                "'<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER)]"
+                f"catalog {self._use!r} has an open transaction: "
+                "COMMIT or ROLLBACK it before USE"
             )
+        if key in self._attached:
+            self._no_txn("USE <attached catalog>")
+            self._use = key
+        else:
+            self._use = None
 
-        return self._query(q, version)
+    def _show_databases(self, m, dex):
+        """DuckDB's attach-list introspection: the bound catalog (spelled
+        'main', its USE-reset alias) plus every ATTACH'd name, with the
+        read-only flag and the current default."""
+        rows = [("main", False, self._use is None)] + [
+            (n, n in self._att_readonly, n == self._use)
+            for n in sorted(self._attached)
+        ]
+        return self.c.spark.createDataFrame(
+            rows, "name string, read_only boolean, is_default boolean"
+        )
+
+    def _show_tables(self, m, dex):
+        from .rollup import _meta_name
+
+        ts = set(self.c.tables())
+        # an MV's meta companion is an implementation detail: list the
+        # MV once (its meta stays directly readable/describable)
+        names = sorted(
+            n
+            for n in (ts | set(self.c.views()))
+            if not (
+                n.endswith("__rollup_meta")
+                and n[: -len("__rollup_meta")] in ts
+                and _meta_name(n[: -len("__rollup_meta")]) == n
+            )
+        )
+        return self.c.spark.createDataFrame(
+            [(n,) for n in names], "name string"
+        )
+
+    def _create_view(self, m, dex):
+        name = m["name"]
+        if not m["replace"] and self._view_exists(name):
+            raise LakeSQLError(f"view {name!r} exists")
+        self._run(lambda tx: tx.create_view(name, m["body"]))
+
+    def _drop_view(self, m, dex):
+        if not m["ifx"] or self._view_exists(m["name"]):
+            self._run(lambda tx: tx.drop_view(m["name"]))
+
+    def _ctas(self, m, dex):
+        """CTAS (S5), optionally range-clustered (X2). The source query
+        evaluates in THIS executor's scope and the rows land through the
+        target's transaction — that is what makes cross-catalog ``CREATE
+        TABLE prod.t AS SELECT ... FROM main_table`` work in both
+        directions. The row count comes from the write itself, not a
+        second execution of the source query."""
+        name = m["name"]
+        df = self._query(m["body"])
+
+        def op(tx):
+            st = tx._state(name, must_exist=False)
+            if m["replace"] and st is not None and not st.dropped:
+                tx.drop_table(name)
+            return tx.ctas(name, df, partition_by=_col_list(m["pby"]))
+
+        return dex._run(op)
+
+    def _create_table(self, m, dex):
+        name = m["name"]
+        if dex._table_exists(name):
+            if m["ifnot"]:
+                return 0
+            raise LakeSQLError(f"table {name!r} exists")
+        schema = self._parse_coldefs(m["cols"])
+        dex._run(
+            lambda tx: tx.create_table(
+                name, schema, partition_by=_col_list(m["pby"])
+            )
+        )
+
+    def _drop_table(self, m, dex):
+        if not m["ifx"] or dex._table_exists(m["name"]):
+            dex._run(lambda tx: tx.drop_table(m["name"]))
+
+    def _add_column(self, m, dex):
+        default = self._literal(m["dflt"]) if m["dflt"] is not None else None
+        dex._run(
+            lambda tx: tx.add_column(
+                m["name"], m["col"], _map_type(m["typ"]), default
+            )
+        )
+
+    def _describe_table(self, m, dex):
+        return dex._describe(m["name"])
+
+    def _describe_query(self, m, dex):
+        """DESCRIBE <query> (DuckDB): the query's resolved schema as rows —
+        analysis only, nothing executes."""
+        df = self._query(m["body"])
+        return self.c.spark.createDataFrame(
+            [
+                (
+                    f.name,
+                    f.dataType.simpleString().upper(),
+                    "YES" if f.nullable else "NO",
+                    None,
+                    None,
+                    None,
+                )
+                for f in df.schema.fields
+            ],
+            "column_name string, column_type string, null string, "
+            "key string, default string, extra string",
+        )
+
+    def _checkpoint(self, m, dex):
+        """DuckDB's CHECKPOINT flushes buffered WAL state to storage; the
+        lake analogue is flushing catalog-inlined rows into parquet files
+        (README.md:243 inlining): one table (optionally qualified,
+        ``CHECKPOINT att.t``) or, bare, every table."""
+        names = [m["name"]] if m["name"] else list(dex.c.tables())
+
+        def op(tx):
+            for t in names:
+                tx.flush_inlined(t)
+
+        dex._run(op)
+        return len(names)
+
+    def _checkpoint_name(self, m, dex):
+        """``CHECKPOINT <name>``: DuckDB's database argument — an attached
+        catalog (or ``main``) is flushed whole, but a LOCAL table of the
+        same name wins the tie."""
+        name = m["name"]
+        if self._table_exists(name) or self._resolve(name) is None:
+            return self._dispatch(f"CHECKPOINT {self._alias}.{name}")
+        return self._resolve(name, write=True)._dispatch("CHECKPOINT")
+
+    def _insert(self, m, dex):
+        """``INSERT [OR REPLACE|IGNORE] INTO t [(cols)] VALUES ... |
+        <select>``: the source evaluates in THIS executor's scope (main
+        tables + qualified attached reads) and lands through the target's
+        transaction, so a qualified target is the same statement."""
+        mode, name, body = m["mode"], m["name"], m["body"]
+        cols = None
+        # a leading "(a, b, c)" identifier list is the column list; a
+        # leading "(SELECT ..." is a parenthesized query body
+        mm = re.match(r"^\(([^)]*)\)\s*(.*)$", body, re.S)
+        if mm and all(
+            re.fullmatch(_IDENT, c.strip()) for c in mm.group(1).split(",")
+        ):
+            cols = [c.strip() for c in mm.group(1).split(",")]
+            body = mm.group(2)
+        if re.match(r"^VALUES\b", body, re.I):
+            df = self.c.spark.sql(f"SELECT * FROM ({body})")
+            # VALUES yields col1..colN: name them from the column list,
+            # else positionally in table order
+            schema = dex._schema_of(name)
+            names = cols or [f.name for f in schema.fields][: len(df.columns)]
+            # Cast each VALUES column to its TARGET column type before
+            # collecting: Spark types a bare `2.0` literal DECIMAL(2,1),
+            # and an un-cast Decimal stored in an inlined row would fail
+            # the read-side DataFrame build against a DOUBLE column.
+            types = {f.name: f.type for f in schema.fields}
+            from pyspark.sql import functions as F
+
+            df = df.toDF(*names).select(
+                *[
+                    F.col(c).cast(types[c]).alias(c)
+                    if c in types
+                    else F.col(c)
+                    for c in names
+                ]
+            )
+            if not mode:
+                # a literal VALUES plan is a LocalRelation — collect() is
+                # driver-side, so tiny inserts take insert_rows'
+                # no-Spark-job inlining fast path (sub-ms writes,
+                # README.md:243)
+                rows = [dict(zip(names, tup)) for tup in df.collect()]
+                dex._run(lambda tx: tx.insert_rows(name, rows))
+                return len(rows)
+        else:
+            df = self._query(body)
+            if cols is not None:
+                if len(cols) != len(df.columns):
+                    raise LakeSQLError(
+                        f"column list has {len(cols)} names, query "
+                        f"produces {len(df.columns)} columns"
+                    )
+                df = df.toDF(*cols)
+        if mode:
+            return dex._upsert_insert(name, df, mode)
+        # count from the write itself — not a second source execution
+        return dex._run(lambda tx: tx.insert(name, df))
+
+    def _update(self, m, dex):
+        # split at the LAST top-level WHERE: a first-match split breaks
+        # SET expressions containing subqueries or 'where' in a literal
+        setlist, where = _split_last_where(m["body"])
+        # bind table views so scalar subqueries in SET/WHERE resolve
+        # (against pre-statement state, DuckDB UPDATE semantics)
+        dex._bind_tables()
+        sets = {}
+        for part in _split_top(setlist):
+            mm = re.match(rf"^({_IDENT})\s*=\s*(.+)$", part, re.S)
+            if not mm:
+                raise LakeSQLError(f"bad SET clause: {part!r}")
+            sets[mm.group(1)] = mm.group(2).strip()
+        return dex._run(lambda tx: tx.update(m["name"], sets, where))
+
+    def _delete(self, m, dex):
+        dex._bind_tables()  # subqueries in WHERE resolve pre-statement
+        return dex._run(lambda tx: tx.delete(m["name"], m["where"]))
 
     # -- materialized views (continuous aggregates behind SQL) ----------
     _MV_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
@@ -1211,8 +779,8 @@ class SQLExecutor:
             raise LakeSQLError("bad MERGE USING clause")
         return None, mm.group(1), rest[mm.end() :]
 
-    def _merge_stmt(self, q: str, evolve: bool = False) -> DataFrame:
-        """``MERGE [WITH SCHEMA EVOLUTION] INTO t [AS a] USING
+    def _merge_stmt(self, m, dex):
+        """``MERGE [WITH SCHEMA EVOLUTION] INTO [cat.]t [AS a] USING
         (<query>|table) [AS b] ON <equi-cond>
         [SEQUENCE BY <source col>]
         WHEN MATCHED [AND cond] THEN UPDATE SET (* | c = expr, ...) | DELETE
@@ -1236,17 +804,22 @@ class SQLExecutor:
         (target columns plain, source columns ``__s_<col>``). DuckLake
         itself ships MERGE as SQL surface; the reference's demos reach the
         same state via UPDATE+INSERT pairs
-        (demos/01_transaction_rollback/demo.py:58-102)."""
-        m = re.match(
-            rf"^MERGE\s+INTO\s+({_IDENT})(?:\s+(?:AS\s+)?(?!USING\b)"
-            rf"({_IDENT}))?\s+USING\s+(.*)$",
-            q,
+        (demos/01_transaction_rollback/demo.py:58-102).
+
+        Like INSERT/CTAS, the USING payload evaluates in THIS executor's
+        scope and the merge runs through the target's transaction, so
+        cross-catalog upserts (``MERGE INTO prod.t USING dev_changes ...``)
+        work in both directions."""
+        mm = re.match(
+            rf"^(?:\s+(?:AS\s+)?(?!USING\b)({_IDENT}))?\s+USING\s+(.*)$",
+            m["rest"],
             re.I | re.S,
         )
-        if not m:
+        if not mm:
             raise LakeSQLError("bad MERGE INTO syntax")
-        target, t_alias, rest = m.group(1), m.group(2), m.group(3)
-        if not self._table_exists(target):
+        target, evolve = m["name"], bool(m["evolve"])
+        t_alias, rest = mm.groups()
+        if not dex._table_exists(target):
             raise LakeSQLError(f"no such table: {target!r}")
         src_sql, src_name, rest = self._scan_merge_source(rest)
         mm = re.match(rf"^\s*(?:AS\s+)?(?!ON\b)({_IDENT})", rest, re.I)
@@ -1278,7 +851,7 @@ class SQLExecutor:
         src_df = self._query(
             src_sql if src_sql is not None else f"SELECT * FROM {src_name}"
         )
-        sch = self._schema_of(target)
+        sch = dex._schema_of(target)
         t_cols = {f.name.lower(): f.name for f in sch.fields}
         s_cols = {c.lower(): c for c in src_df.columns}
         t_al = (t_alias or target).lower()
@@ -1650,8 +1223,8 @@ class SQLExecutor:
                 + r.get("acted_by_source", 0)
             )
 
-        self._run(op)
-        return self._status("MERGE", n[0])
+        dex._run(op)
+        return n[0]
 
     # SQL keywords never rewritten as bare column references: a source
     # column named 'end' or 'then' must be alias-qualified (s.end) to be
@@ -1817,9 +1390,7 @@ class SQLExecutor:
         )
         return True
 
-    def _copy_from_stmt(
-        self, name: str, path: str, opts_text: str
-    ) -> DataFrame:
+    def _copy_from_stmt(self, m, dex):
         """``COPY t FROM '<path>' [(FORMAT PARQUET|CSV [, HEADER
         true|false] [, DELIMITER 'c'])]`` — DuckDB's file-ingestion verb:
         read the external file(s) and INSERT them through the normal
@@ -1828,6 +1399,7 @@ class SQLExecutor:
         COPY TO, this IS transactional (it's an insert), so it composes
         with BEGIN/ROLLBACK; csv header auto-detection as in
         :meth:`_external_df`."""
+        path, opts_text = m["path"].replace("''", "'"), m["opts"]
         fmt, header, delim, quote, columns = None, None, ",", '"', None
         for item in _split_top(opts_text) if opts_text else []:
             mm = re.match(r"^([A-Za-z_]+)\s*(.*)$", item.strip(), re.S)
@@ -1858,15 +1430,9 @@ class SQLExecutor:
         df = self._external_df(
             path, fmt, header, delim, quote=quote, columns=columns
         )
-        n = [0]
+        return self._run(lambda tx: tx.insert(m["name"], df))
 
-        def op(tx):
-            n[0] = tx.insert(name, df)
-
-        self._run(op)
-        return self._status("COPY", n[0])
-
-    def _copy_stmt(self, srctok: str, path: str, opts_text: str) -> DataFrame:
+    def _copy_stmt(self, m, dex):
         """``COPY <table|(subquery)> TO '<path>' [(FORMAT PARQUET|CSV
         [, HEADER true|false] [, DELIMITER 'c'] [, OVERWRITE]
         [, PARTITION_BY (cols)])]`` — DuckDB's result-export verb over
@@ -1890,7 +1456,8 @@ class SQLExecutor:
         import shutil
         import uuid as _uuid
 
-        df = self._rows_arg(srctok, "COPY source")
+        path, opts_text = m["path"].replace("''", "'"), m["opts"]
+        df = self._rows_arg(m["src"], "COPY source")
         fmt, header, delim, overwrite = None, None, ",", False
         partition_by = []
         for item in _split_top(opts_text) if opts_text else []:
@@ -2032,9 +1599,9 @@ class SQLExecutor:
             n = _rows_written(
                 sorted(_glob.glob(os.path.join(path, pattern)))
             )
-        return self._status("COPY", n)
+        return n
 
-    def _call_stmt(self, fn: str, argstext: str) -> DataFrame:
+    def _call_stmt(self, m, dex):
         """``CALL expire_snapshots(...)`` / ``CALL compact(t [, bytes])`` /
         ``CALL flush_inlined(t)`` / ``CALL gc([min_age_seconds])`` —
         SQL verbs over the existing maintenance engines (catalog.py), so a
@@ -2042,7 +1609,7 @@ class SQLExecutor:
         spellings accepted: ducklake_expire_snapshots,
         ducklake_merge_adjacent_files (-> compact),
         ducklake_cleanup_old_files (-> gc)."""
-        self._no_txn("CALL")
+        fn, argstext = m["fn"], m["args"]
         f = fn.lower()
         if f.startswith("ducklake_"):
             f = f[len("ducklake_") :]
@@ -2076,61 +1643,46 @@ class SQLExecutor:
         _df_arg = self._rows_arg
 
         def _qual(tok):
-            """``att.t`` (bare or quoted) -> (catalog_key, table);
-            (None, None) when the token is undotted. A QUOTED dotted token
-            only splits when its prefix names an attached catalog (or
-            'main'): ``CALL compact('a.b')`` on a table literally named
-            ``a.b`` is a table lookup, not a routing error (r14 ADVICE —
-            bare ``att.t`` is unambiguous SQL qualification and always
-            splits)."""
+            """``att.t`` (bare or quoted) -> (catalog, table); (None,
+            None) when the token is undotted. A QUOTED dotted token only
+            splits when its prefix resolves to a catalog: ``CALL
+            compact('a.b')`` on a table literally named ``a.b`` is a table
+            lookup, not a routing error (r14 ADVICE — bare ``att.t`` is
+            unambiguous SQL qualification and always splits)."""
             t = tok.strip()
             quoted = t.startswith("'") and t.endswith("'")
             if quoted:
                 t = t[1:-1].replace("''", "'")
             mm = re.fullmatch(rf"({_IDENT})\s*\.\s*({_IDENT})", t)
-            if mm is None:
+            if mm is None or quoted and self._resolve(mm.group(1)) is None:
                 return (None, None)
-            cat = mm.group(1).lower()
-            if quoted and cat != "main" and cat not in self._attached:
-                return (None, None)
-            return (cat, mm.group(2))
+            return mm.groups()
 
-        def _route(
-            cat: str, args: list, allow_readonly: bool = False
-        ) -> DataFrame:
-            """Re-issue this CALL against catalog ``cat``'s own engine —
-            the _attached_write dispatch pattern: self/'main'-qualified
-            strips the qualifier, READ_ONLY targets are refused (unless
-            the verb is a pure read — probe), unknown names error.
-            SQL-first maintenance of an attached catalog no longer needs
-            USE round trips (r13 verdict task 4)."""
-            stmt = f"CALL {f}({', '.join(args)})"
-            target_c = self._attached.get(cat)
-            if target_c is self.c or (target_c is None and cat == "main"):
-                return self.execute(stmt)
-            if target_c is None:
-                raise LakeSQLError(f"no attached catalog named {cat!r}")
-            if cat in self._att_readonly and not allow_readonly:
-                raise LakeSQLError(f"catalog {cat!r} is attached READ_ONLY")
-            return self._att_executor(cat).execute(stmt)
-
-        # table-level maintenance verbs accept a qualified <att>.<t> target
-        if f in ("compact", "optimize", "flush_inlined") and pos:
-            cat, qtbl = _qual(pos[0])
+        # Qualified targets: table-level verbs take <att>.<t> as their
+        # first argument, catalog-level verbs take catalog => 'att', the
+        # vector-index verbs either (r13 verdict task 4, r14 task 3). A
+        # target in another catalog re-issues this CALL against that
+        # catalog's own engine, where its operands resolve — no USE round
+        # trips. probe_vector_index is the one pure read: allowed against
+        # READ_ONLY catalogs; every other procedure is a write, also when
+        # unqualified (a READ_ONLY default refuses it).
+        vector = f in (
+            "build_vector_index", "extend_vector_index",
+            "remove_vectors", "probe_vector_index",
+        )
+        cat = None
+        if "catalog" in named and (vector or f in ("expire_snapshots", "gc")):
+            cat = str(_val(named.pop("catalog")))
+        elif pos and (vector or f in ("compact", "optimize", "flush_inlined")):
+            cat, tbl = _qual(pos[0])
             if cat is not None:
-                esc = qtbl.replace("'", "''")
-                return _route(
-                    cat,
-                    [f"'{esc}'"]
-                    + pos[1:]
-                    + [f"{k} => {v}" for k, v in named.items()],
-                )
-        # catalog-level verbs take the target as catalog => 'att'
-        if f in ("expire_snapshots", "gc") and "catalog" in named:
-            cat = str(_val(named.pop("catalog"))).lower()
-            return _route(
-                cat, pos + [f"{k} => {v}" for k, v in named.items()]
-            )
+                pos[0] = "'" + tbl.replace("'", "''") + "'"
+        dex = self._resolve(cat, write=f != "probe_vector_index")
+        if dex is None:
+            raise LakeSQLError(f"no attached catalog named {cat!r}")
+        if dex is not self:
+            args = pos + [f"{k} => {v}" for k, v in named.items()]
+            return dex._dispatch(f"CALL {f}({', '.join(args)})")
 
         if f == "expire_snapshots":
             kw = {}
@@ -2211,36 +1763,7 @@ class SQLExecutor:
                 **({"min_age_seconds": float(_val(age))} if age else {})
             )
             return self._status("CALL gc", len(removed))
-        if f in (
-            "build_vector_index", "extend_vector_index",
-            "remove_vectors", "probe_vector_index",
-        ):
-            # qualified routing, like the table/catalog maintenance verbs
-            # (r14 verdict task 3): CALL build_vector_index('att.idx', ...)
-            # or ... catalog => 'att' re-issues against the attachment's
-            # own engine, where the source/ids/queries operand resolves in
-            # THAT catalog. probe is a pure read — allowed against
-            # READ_ONLY attachments; the three mutating verbs are refused
-            # there like compact/optimize.
-            ro_ok = f == "probe_vector_index"
-            if "catalog" in named:
-                cat = str(_val(named.pop("catalog"))).lower()
-                return _route(
-                    cat,
-                    pos + [f"{k} => {v}" for k, v in named.items()],
-                    allow_readonly=ro_ok,
-                )
-            if pos:
-                cat, qidx = _qual(pos[0])
-                if cat is not None:
-                    esc = qidx.replace("'", "''")
-                    return _route(
-                        cat,
-                        [f"'{esc}'"]
-                        + pos[1:]
-                        + [f"{k} => {v}" for k, v in named.items()],
-                        allow_readonly=ro_ok,
-                    )
+        if vector:
             # X15 lifecycle as SQL verbs — same engines as the Python API
             # (ducktales_spark/vector_index.py); probe returns its result
             # set like a table function
@@ -2392,7 +1915,22 @@ class SQLExecutor:
     )
 
     def _parse_mv_select(self, body: str) -> dict:
-        """Parse the incrementally-maintainable aggregate-SELECT subset.
+        """Parse the incrementally-maintainable aggregate-SELECT subset:
+        ``SELECT <keys...>, [time_bucket(INTERVAL '1 hour', ts),]
+        COUNT(*)/COUNT([DISTINCT] col)/APPROX_COUNT_DISTINCT(col)/
+        SUM/AVG/MIN/MAX/STDDEV/VARIANCE(col)... FROM <lake table> [WHERE
+        <pred over source columns, no subqueries>] GROUP BY ... [HAVING
+        <pred over the selected aggregates/keys>]`` — no JOIN (the same
+        restriction TimescaleDB continuous aggregates and Materialize
+        place on their incremental paths). The WHERE is maintainable
+        because CDC diff rows carry the predicate columns (the reference's
+        own summary view filters rows, demos/03_schema_evolution/
+        demo.py:273-288); the HAVING is a READ-TIME group filter over the
+        maintained face, so state for a group that dips below the
+        threshold is never lost. Reads go through
+        :func:`~ducktales_spark.lake.rollup.read_rollup`, so ``avg_<c>``
+        needs no hand-dividing and ``approx_distinct_<c>`` reads as the
+        HLL estimate, never raw sketch bytes.
 
         Output columns use the rollup tier's canonical names (bucket_start,
         <keys>, n_rows, sum_<c>/avg_<c>/min_<c>/max_<c>); an explicit alias
@@ -2828,11 +2366,11 @@ class SQLExecutor:
             )
         return rewritten
 
-    def _create_mv(self, name: str, body: str, replace: bool) -> DataFrame:
+    def _create_mv(self, m, dex):
         from .rollup import create_rollup
 
-        self._no_txn("CREATE MATERIALIZED VIEW")
-        spec = self._parse_mv_select(body)
+        name = m["name"]
+        spec = self._parse_mv_select(m["body"])
         if not self._table_exists(spec["src"]):
             raise LakeSQLError(f"no such table: {spec['src']!r}")
         # Validate every referenced column against the source schema BEFORE
@@ -2885,7 +2423,7 @@ class SQLExecutor:
                 ) from None
         is_replace = False
         if self._mv_exists(name):
-            if not replace:
+            if not m["replace"]:
                 raise LakeSQLError(f"materialized view {name!r} exists")
             is_replace = True
         elif self._table_exists(name):
@@ -2911,25 +2449,21 @@ class SQLExecutor:
             key_exprs=spec["key_exprs"],
             having=spec["having"],
         )
-        return self._status("CREATE MATERIALIZED VIEW", 0)
 
-    def _refresh_mv(self, name: str) -> DataFrame:
+    def _refresh_mv(self, m, dex):
         from .rollup import refresh_rollup
 
-        self._no_txn("REFRESH MATERIALIZED VIEW")
-        if not self._mv_exists(name):
-            raise LakeSQLError(f"no such materialized view: {name!r}")
-        out = refresh_rollup(self.c, name)
-        return self._status(
-            "REFRESH MATERIALIZED VIEW", out["changed_buckets"]
-        )
+        if not self._mv_exists(m["name"]):
+            raise LakeSQLError(f"no such materialized view: {m['name']!r}")
+        return refresh_rollup(self.c, m["name"])["changed_buckets"]
 
-    def _drop_mv(self, name: str, if_exists: bool) -> DataFrame:
+    def _drop_mv(self, m, dex):
         from .rollup import _meta_name
 
+        name = m["name"]
         if not self._mv_exists(name):
-            if if_exists:
-                return self._status("DROP MATERIALIZED VIEW", 0)
+            if m["ifx"]:
+                return 0
             raise LakeSQLError(f"no such materialized view: {name!r}")
 
         def op(tx):
@@ -2937,7 +2471,6 @@ class SQLExecutor:
             tx.drop_table(_meta_name(name))
 
         self._run(op)
-        return self._status("DROP MATERIALIZED VIEW", 0)
 
     def _mv_overlay(self, version=None) -> None:
         """Re-bind every materialized view through the rollup read face so
@@ -2974,14 +2507,14 @@ class SQLExecutor:
             ).createOrReplaceTempView(t)
 
     # ------------------------------------------------------------------
-    def _run(self, op) -> None:
-        """Run a transactional op: inside the open explicit txn, or
-        autocommit (one snapshot — the reference's per-op snapshot loop)."""
+    def _run(self, op):
+        """Run a transactional op and return its result: inside the open
+        explicit txn, or autocommit (one snapshot — the reference's per-op
+        snapshot loop)."""
         if self._tx is not None:
-            op(self._tx)
-        else:
-            with self.c.transaction() as tx:
-                op(tx)
+            return op(self._tx)
+        with self.c.transaction() as tx:
+            return op(tx)
 
     def _query(self, body: str, version=None) -> DataFrame:
         """Evaluate a read query through Catalyst, binding lake tables and
@@ -3024,7 +2557,7 @@ class SQLExecutor:
             return "'" + v.replace("'", "''") + "'"
         return str(v)
 
-    def _export_database(self, path: str, fmt: str) -> DataFrame:
+    def _export_database(self, m, dex):
         """``EXPORT DATABASE '<dir>' [(FORMAT PARQUET|CSV)]`` — DuckDB's
         file-based portability verb: ``schema.sql`` (CREATE TABLE with
         NOT NULL / DEFAULT / PRIMARY KEY / PARTITION BY, then CREATE VIEW),
@@ -3039,13 +2572,13 @@ class SQLExecutor:
         not round-trip CSV losslessly, use PARQUET."""
         import os as _os
 
-        fmt = fmt.upper()
+        path = m["path"].replace("''", "'")
+        fmt = (m["fmt"] or "PARQUET").upper()
         if fmt not in ("PARQUET", "CSV"):
             raise LakeSQLError(
                 f"EXPORT DATABASE format {fmt!r} not supported "
                 "(PARQUET or CSV)"
             )
-        self._no_txn("EXPORT DATABASE")
         if fmt == "CSV":
             for t in self.c.tables():
                 bad = [
@@ -3126,7 +2659,7 @@ class SQLExecutor:
             fh.write("\n".join(schema_lines) + "\n")
         with open(_os.path.join(path, "load.sql"), "w") as fh:
             fh.write("\n".join(load_lines) + "\n")
-        return self._status("EXPORT DATABASE", len(tables))
+        return len(tables)
 
     @staticmethod
     def _split_script(text: str):
@@ -3162,7 +2695,7 @@ class SQLExecutor:
             stmts.append(s)
         return stmts
 
-    def _import_database(self, path: str) -> DataFrame:
+    def _import_database(self, m, dex):
         """``IMPORT DATABASE '<dir>'`` — executes the exported
         ``schema.sql`` then ``load.sql`` (quote-aware statement split,
         the shape _export_database writes), then restamps ONLY the
@@ -3173,7 +2706,7 @@ class SQLExecutor:
         deltas on the next REFRESH."""
         import os as _os
 
-        self._no_txn("IMPORT DATABASE")
+        path = m["path"].replace("''", "'")
         n = 0
         created: set = set()
         for script in ("schema.sql", "load.sql"):
@@ -3194,7 +2727,7 @@ class SQLExecutor:
                     self.execute(stmt)
                     n += 1
         self.c.restamp_rollup_metas(only=created)
-        return self._status("IMPORT DATABASE", n)
+        return n
 
     def _write_single_file(
         self, df: DataFrame, target: str, fmt: str = "parquet"
@@ -3225,7 +2758,7 @@ class SQLExecutor:
             _shutil.rmtree(tmp, ignore_errors=True)
 
     # -- INSERT OR REPLACE / OR IGNORE (DuckDB ON CONFLICT shorthands) -----
-    def _upsert_insert(self, name: str, df: DataFrame, mode: str) -> DataFrame:
+    def _upsert_insert(self, name: str, df: DataFrame, mode: str) -> int:
         """``INSERT OR REPLACE INTO`` (upsert by primary key) and ``INSERT
         OR IGNORE INTO`` (insert only non-conflicting rows) — DuckDB's ON
         CONFLICT shorthands, lowered onto the MERGE machinery (stats-pruned
@@ -3255,8 +2788,8 @@ class SQLExecutor:
             )
 
         self._run(op)
-        n = res.get("inserted", 0) + (res.get("matched", 0) if replace else 0)
-        return self._status("INSERT", n)
+        n = res.get("inserted", 0)
+        return n + (res.get("matched", 0) if replace else 0)
 
     # -- SUMMARIZE (DuckDB's per-column profile verb) ----------------------
     _SUMMARIZE_SCHEMA = (
@@ -3265,7 +2798,7 @@ class SQLExecutor:
         "q50 string, q75 string, count bigint, null_percentage decimal(5,2)"
     )
 
-    def _summarize_stmt(self, target: str) -> DataFrame:
+    def _summarize_stmt(self, m, dex):
         """``SUMMARIZE <table>`` / ``SUMMARIZE <select>`` — DuckDB's
         per-column profile (min/max/approx_unique/avg/std/quartiles/count/
         null%), same column layout. ONE global aggregation over one scan
@@ -3281,6 +2814,7 @@ class SQLExecutor:
 
         from pyspark.sql import functions as F, types as T
 
+        target = m["body"].strip()
         if re.fullmatch(rf"{_IDENT}(\s*\.\s*{_IDENT})?", target):
             # bare or attached-catalog-qualified table name
             df = self._query(f"SELECT * FROM {target}")
@@ -3477,49 +3011,7 @@ class SQLExecutor:
         )
 
     # -- attached catalogs (ATTACH 'path' AS name) -----------------------
-    def _att_executor(self, cat: str) -> "SQLExecutor":
-        """The lazily-built per-attached-catalog delegate executor.
-
-        The delegate sees the SAME attach list as this executor (minus
-        itself, plus ``main`` for the bound catalog), refreshed on every
-        delegation so ATTACH/DETACH changes propagate: under ``USE prod``,
-        ``SELECT ... FROM dev.t`` and ``INSERT INTO main.t ...`` keep
-        resolving — DuckDB's attach list stays usable regardless of the
-        default catalog."""
-        key = cat.lower()
-        dex = self._att_sql.get(key)
-        if dex is None:
-            dex = self._att_sql[key] = SQLExecutor(self._attached[key])
-        # the delegate's OWN alias stays in the list: self-qualified
-        # statements (`USE prod; INSERT INTO prod.t ...`) resolve via the
-        # is-self identity check in the dispatch, which strips the
-        # qualifier instead of spawning a second executor
-        shared = dict(self._attached)
-        # setdefault, not assignment: in a DELEGATE executor the inherited
-        # 'main' already names the top-level bound catalog — rebinding it
-        # to this (USE'd) catalog would make main.* mean different things
-        # at different delegation depths
-        shared.setdefault("main", self.c)
-        dex._attached = shared
-        dex._att_readonly = {
-            k for k in self._att_readonly if k != key
-        }
-        # drop delegate sub-executors whose name was re-bound to a
-        # different catalog (DETACH + ATTACH same alias, new path)
-        dex._att_sql = {
-            k: v
-            for k, v in dex._att_sql.items()
-            if shared.get(k) is v.c
-        }
-        return dex
-
-    def _attach_stmt(
-        self,
-        path: str,
-        name: str,
-        read_only: bool = False,
-        data_path: Optional[str] = None,
-    ) -> DataFrame:
+    def _attach_stmt(self, m, dex):
         """``ATTACH '<path>' AS <name> [(READ_ONLY | DATA_PATH '<dir>',
         ...)]`` — bind a SECOND lake catalog for qualified reads and
         writes, the reference's side-by-side dev/prod migration flow
@@ -3535,7 +3027,20 @@ class SQLExecutor:
         where a default derives from the catalog location. The
         ``ducklake:`` / ``lake:`` URL prefixes are accepted and
         stripped."""
-        self._no_txn("ATTACH")
+        read_only, data_path = False, None
+        for item in _split_top(m["opts"]) if m["opts"] else []:
+            if re.fullmatch(r"READ_ONLY", item, re.I):
+                read_only = True
+                continue
+            mm = re.fullmatch(r"DATA_PATH\s+'((?:[^']|'')*)'", item, re.I)
+            if mm:
+                data_path = mm.group(1).replace("''", "'")
+                continue
+            raise LakeSQLError(
+                f"unknown ATTACH option {item!r} "
+                "(READ_ONLY, DATA_PATH '<dir>')"
+            )
+        name, path = m["name"], m["path"].replace("''", "'")
         key = name.lower()
         if key == "main":
             # 'main' names the BOUND catalog everywhere (qualified
@@ -3561,194 +3066,50 @@ class SQLExecutor:
             raise LakeSQLError(str(e)) from e
         if read_only:
             self._att_readonly.add(key)
-        return self._status("ATTACH", 0)
 
-    def _detach_stmt(self, name: str) -> DataFrame:
-        self._no_txn("DETACH")
-        dex = self._att_sql.get(name.lower())
-        if dex is not None and dex._tx is not None:
+    def _detach_stmt(self, m, dex):
+        key = m["name"].lower()
+        delegate = self._att_sql.get(key)
+        if delegate is not None and delegate._tx is not None:
             # detaching would silently discard the staged writes
             raise LakeSQLError(
-                f"catalog {name!r} has an open transaction: COMMIT or "
+                f"catalog {m['name']!r} has an open transaction: COMMIT or "
                 "ROLLBACK it before DETACH"
             )
-        if self._attached.pop(name.lower(), None) is None:
-            raise LakeSQLError(f"no attached catalog named {name!r}")
-        self._att_sql.pop(name.lower(), None)
-        self._att_readonly.discard(name.lower())
-        if self._use == name.lower():
+        if self._attached.pop(key, None) is None:
+            raise LakeSQLError(f"no attached catalog named {m['name']!r}")
+        self._att_sql.pop(key, None)
+        self._att_readonly.discard(key)
+        if self._use == key:
             self._use = None  # default falls back to the bound catalog
-        return self._status("DETACH", 0)
 
-    def _attached_write(
-        self, verb: str, cat: str, tbl: str, rest: str
-    ) -> DataFrame:
-        """Qualified-target DML/DDL into an ATTACH'd catalog — the
-        reference's migration demo creates tables in and inserts into the
-        attached prod catalog (demos/05_catalog_portability/demo.py:
-        199-280). Statements whose whole scope is the attached catalog
-        (VALUES inserts, UPDATE/DELETE/TRUNCATE, column-def CREATE, DROP,
-        ALTER) delegate to a per-catalog sub-executor with the qualifier
-        stripped; SELECT-sourced INSERT and CTAS evaluate the source in
-        THIS executor's scope (main tables + qualified attached reads)
-        and write the result through the attached catalog's transaction —
-        that is what makes cross-catalog ``CREATE TABLE prod.t AS SELECT
-        ... FROM main_table`` work in both directions. Writes autocommit
-        in the attached catalog and are refused inside an open main
-        transaction (one write target per transaction, DuckDB's
-        cross-database rule)."""
-        self._no_txn(f"write to attached catalog {cat!r}")
-        key = cat.lower()
-        if key in self._att_readonly:
-            raise LakeSQLError(
-                f"catalog {cat!r} is attached READ_ONLY"
-            )
-        dex = self._att_executor(cat)
-        vu = re.sub(r"\s+", " ", verb.upper())
-        if vu.startswith("INSERT"):
-            body, cols = rest, None
-            mm = re.match(r"^\s*\(([^)]*)\)\s*(.*)$", body, re.S)
-            if mm and all(
-                re.fullmatch(_IDENT, c.strip())
-                for c in mm.group(1).split(",")
-            ):
-                cols = [c.strip() for c in mm.group(1).split(",")]
-                body = mm.group(2)
-            if re.match(r"^\s*VALUES\b", body, re.I):
-                # self-contained: the sub-executor handles typing,
-                # inlining fast path, and OR REPLACE/IGNORE identically
-                return dex.execute(f"{verb} {tbl}{rest}")
-            df = self._query(body)  # MAIN scope: cross-catalog source
-            if cols is not None:
-                if len(cols) != len(df.columns):
-                    raise LakeSQLError(
-                        f"column list has {len(cols)} names, query "
-                        f"produces {len(df.columns)} columns"
-                    )
-                df = df.toDF(*cols)
-            mmode = re.match(r"^INSERT OR (REPLACE|IGNORE)\b", vu)
-            if mmode:
-                return dex._upsert_insert(tbl, df, mmode.group(1))
-            n = [0]
-            dex._run(lambda tx: n.__setitem__(0, tx.insert(tbl, df)))
-            return self._status("INSERT", n[0])
-        if vu.startswith("CREATE"):
-            mm = re.match(
-                r"^\s*(?:PARTITION\s+BY\s*\(([^()]+)\)\s*)?AS\s+(.*)$",
-                rest,
-                re.I | re.S,
-            )
-            if mm:  # CTAS with a main-scope source query
-                pby, body = mm.groups()
-                partition_by = (
-                    [c.strip() for c in pby.split(",")] if pby else ()
-                )
-                df = self._query(body)
-                replace = "OR REPLACE" in vu
-                n = [0]
-
-                def op(tx):
-                    st = tx._state(tbl, must_exist=False)
-                    if replace and st is not None and not st.dropped:
-                        tx.drop_table(tbl)
-                    n[0] = tx.ctas(tbl, df, partition_by=partition_by)
-
-                dex._run(op)
-                return self._status("CREATE TABLE AS", n[0])
-            return dex.execute(f"{verb} {tbl}{rest}")  # column-def form
-        # UPDATE / DELETE / TRUNCATE / DROP / ALTER: scope is the
-        # attached table alone — delegate with the qualifier stripped
-        return dex.execute(f"{verb} {tbl}{rest}")
-
-    def _attached_merge(
-        self, cat: str, tbl: str, rest: str, evolve: bool
-    ) -> DataFrame:
-        """``MERGE [WITH SCHEMA EVOLUTION] INTO <att>.<t> USING ...`` —
-        the last qualified write verb (r12 refused it). Same split as
-        _attached_write's INSERT/CTAS: the USING payload evaluates in
-        THIS executor's scope (main tables + qualified attached reads),
-        lands as a temp view, and the delegate executor runs the MERGE
-        against it through the attached catalog's transaction — cross-
-        catalog upserts (``MERGE INTO prod.t USING dev_changes ...``)
-        work in both directions."""
-        import uuid as _uuid
-
-        self._no_txn(f"write to attached catalog {cat!r}")
-        if cat.lower() in self._att_readonly:
-            raise LakeSQLError(
-                f"catalog {cat!r} is attached READ_ONLY"
-            )
-        dex = self._att_executor(cat)
-        m = re.match(
-            rf"^(\s+(?:AS\s+)?(?!USING\b){_IDENT})?\s+USING\s+(.*)$",
-            rest,
-            re.I | re.S,
-        )
-        if not m:
-            raise LakeSQLError("bad MERGE INTO syntax")
-        t_alias_txt = m.group(1) or ""
-        src_sql, src_name, tail = self._scan_merge_source(m.group(2))
-        df = self._query(  # MAIN scope: cross-catalog source
-            src_sql if src_sql is not None else f"SELECT * FROM {src_name}"
-        )
-        view = f"__merge_src_{_uuid.uuid4().hex[:12]}"
-        # keep the original alias; an unaliased table source keeps its
-        # name as the alias so qualified references still resolve
-        mm = re.match(rf"^\s*(?:AS\s+)?(?!ON\b)({_IDENT})", tail, re.I)
-        if mm:
-            alias_txt, tail = f" AS {mm.group(1)}", tail[mm.end():]
-        elif src_name is not None:
-            alias_txt = f" AS {src_name.rsplit('.', 1)[-1].strip()}"
-        else:
-            alias_txt = ""
-        df.createOrReplaceTempView(view)
-        try:
-            return dex._merge_stmt(
-                f"MERGE INTO {tbl}{t_alias_txt} USING {view}{alias_txt}"
-                f"{tail}",
-                evolve=evolve,
-            )
-        finally:
-            self.c.spark.catalog.dropTempView(view)
-
-    def _copy_database_stmt(self, src: str, dst: str) -> DataFrame:
+    def _copy_database_stmt(self, m, dex):
         """``COPY FROM DATABASE a TO b`` — DuckDB's whole-catalog
         migration verb (demos/05_catalog_portability/demo.py:199-280):
         every live table (schema + PK + rows) and view recreated in the
         target via export_to. Either side may be an attached name or
-        ``main`` (the bound catalog)."""
-        self._no_txn("COPY FROM DATABASE")
-
-        def _cat(n: str):
-            if n.lower() == "main":
-                return self.c
-            got = self._attached.get(n.lower())
-            if got is None:
+        ``main`` (the bound catalog); the target resolves as a write
+        (export_to creates tables, inserts rows, and restamps metas)."""
+        dst_x = self._resolve(m["dst"], write=True)
+        src_x = self._resolve(m["src"])
+        for n, x in ((m["dst"], dst_x), (m["src"], src_x)):
+            if x is None:
                 raise LakeSQLError(
                     f"no attached catalog named {n!r} (ATTACH it first; "
                     "'main' names the bound catalog)"
                 )
-            return got
-
-        if dst.lower() in self._att_readonly:
-            # same contract as qualified DML / USE-delegated writes:
-            # export_to creates tables, inserts rows, and restamps metas
-            raise LakeSQLError(f"catalog {dst!r} is attached READ_ONLY")
-        for side in (src, dst):
-            dex = self._att_sql.get(side.lower())
-            if dex is not None and dex._tx is not None:
+            if x._tx is not None:
                 # migrating into (or out of) a catalog whose USE'd
                 # delegate holds staged writes would interleave with —
                 # or conflict against — that open transaction
                 raise LakeSQLError(
-                    f"catalog {side!r} has an open transaction: COMMIT "
+                    f"catalog {n!r} has an open transaction: COMMIT "
                     "or ROLLBACK it before COPY FROM DATABASE"
                 )
-        src_c, dst_c = _cat(src), _cat(dst)
-        if src_c is dst_c:
+        if src_x.c is dst_x.c:
             raise LakeSQLError("COPY FROM DATABASE: source == target")
-        src_c.export_to(dst_c)
-        return self._status("COPY FROM DATABASE", len(src_c.tables()))
+        src_x.c.export_to(dst_x.c)
+        return len(src_x.c.tables())
 
     def _rewrite_attached(self, q: str) -> str:
         """Rewrite ``<attached>.<table>`` qualified references to temp
@@ -3766,23 +3127,16 @@ class SQLExecutor:
             return q
         from .rollup import META_REQUIRED_COLS, _meta_name, read_rollup
 
-        def _bind(cat: str, tbl: str, version=None):
-            """-> view name, or None when (cat, tbl) isn't an attached
-            table (the caller leaves the original text alone). ``main``
-            resolves to the bound catalog unless shadowed by a real
-            attachment — so qualified reads keep working from delegate
-            executors and `SELECT ... FROM main.t` means the same thing
-            everywhere."""
-            ac = self._attached.get(cat.lower())
-            if ac is None and cat.lower() == "main":
-                ac = self.c
-            if ac is None:
-                return None
-            if ac is self.c and version is None:
+        def _bind(dex, cat: str, tbl: str, version=None):
+            """-> view name, or None when ``tbl`` isn't a table of the
+            catalog ``cat`` resolved to (the caller leaves the original
+            text alone)."""
+            if dex is self and version is None:
                 # self-qualification: the executor's own bind already
                 # registered this table (txn-staged state included) —
                 # the unqualified name IS the right view
                 return tbl if self._table_exists(tbl) else None
+            ac = dex.c
             ts = set(ac.tables())
             if tbl not in ts:
                 return None
@@ -3802,21 +3156,22 @@ class SQLExecutor:
             cat, tbl, kind, val = (
                 m.group(1), m.group(2), m.group(3), m.group(4),
             )
-            ac = self._attached.get(cat.lower())
-            if ac is None and cat.lower() == "main":
-                ac = self.c
-            if ac is None:
+            dex = self._resolve(cat)
+            if dex is None:
                 return m.group(0)
             if kind.upper() == "VERSION":
                 version = int(val)
             else:
-                version = ac._resolve_version(
+                version = dex.c._resolve_version(
                     timestamp=val.strip().strip("'\"")
                 )
-            return _bind(cat, tbl, version) or m.group(0)
+            return _bind(dex, cat, tbl, version) or m.group(0)
 
         def _rw(m: "re.Match") -> str:
-            return _bind(m.group(1), m.group(2)) or m.group(0)
+            dex = self._resolve(m.group(1))
+            if dex is None:
+                return m.group(0)
+            return _bind(dex, m.group(1), m.group(2)) or m.group(0)
 
         from .rollup import map_sql_nonliteral
 
@@ -4087,8 +3442,8 @@ class SQLExecutor:
             to that catalog (r12); anything else — including the bound
             catalog's own mount alias — is the bound catalog."""
             key = dbarg.strip().strip("'\"").lower()
-            got = self._attached.get(key)
-            return (got, key) if got is not None else (self.c, "main")
+            dex = self._resolve(key) or self
+            return dex.c, (key if dex is not self else "main")
 
         def _snaps(m: "re.Match") -> str:
             cat, key = _cat_for(m.group(1))
@@ -4302,3 +3657,292 @@ class SQLExecutor:
         return self.c.spark.createDataFrame(
             [(op, int(rows))], "op string, rows bigint"
         )
+
+
+def _tx_op(fn):
+    """A handler running ``fn(tx, m)`` in the target's transaction."""
+    return lambda self, m, dex: dex._run(lambda tx: fn(tx, m))
+
+
+def _bad_copy(self, m, dex):
+    # a malformed COPY must fail IN-BAND, not fall through to _query and
+    # surface as an unrelated Catalyst parse error
+    raise LakeSQLError(
+        "bad COPY statement: expected COPY <table|(subquery)> "
+        "TO '<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER, "
+        "OVERWRITE, PARTITION_BY (cols))] or COPY <table> FROM "
+        "'<path>' [(FORMAT PARQUET|CSV, HEADER, DELIMITER)]"
+    )
+
+
+_X = SQLExecutor
+_QUOTED = r"'(?P<path>(?:[^']|'')*)'"
+# The statement dispatch: (label, pattern, handler, flags), tried in order
+# by SQLExecutor._dispatch; the first match handles the statement and
+# anything unmatched is a read query. The label names the status row and
+# the self-commit refusal. Order matters where patterns overlap:
+# MATERIALIZED VIEW before VIEW, CTAS before the column-def CREATE TABLE,
+# the qualified CHECKPOINT before the dotless one, COPY TO / FROM before
+# the malformed-COPY catch-all.
+_VERBS = [
+    (label, re.compile(pat, re.I | re.S), handler, flags)
+    for label, pat, handler, flags in [
+        # transactions (demos/01_transaction_rollback/demo.py:85-104)
+        ("BEGIN", r"BEGIN(?:\s+TRANSACTION)?$", _X._begin, 0),
+        ("COMMIT", r"COMMIT$", _X._end_txn, 0),
+        ("ROLLBACK", r"ROLLBACK$", _X._end_txn, 0),
+        # the attach list (demos/05_catalog_portability/demo.py:194-299)
+        ("USE", rf"USE\s+(?P<name>{_IDENT})$", _X._use_stmt, _LOCAL),
+        (
+            "ATTACH",
+            rf"ATTACH\s+{_QUOTED}\s+AS\s+(?P<name>{_IDENT})"
+            r"\s*(?:\((?P<opts>.*)\))?$",
+            _X._attach_stmt,
+            _SELF_COMMITS | _LOCAL,
+        ),
+        (
+            "DETACH", rf"DETACH\s+(?P<name>{_IDENT})$", _X._detach_stmt,
+            _SELF_COMMITS | _LOCAL,
+        ),
+        ("SHOW DATABASES", r"SHOW\s+DATABASES$", _X._show_databases, _LOCAL),
+        (
+            "COPY FROM DATABASE",
+            rf"COPY\s+FROM\s+DATABASE\s+(?P<src>{_IDENT})\s+TO\s+"
+            rf"(?P<dst>{_IDENT})$",
+            _X._copy_database_stmt,
+            _MUTATES | _SELF_COMMITS | _LOCAL,
+        ),
+        # whole-database export / import (file-based portability pair)
+        (
+            "EXPORT DATABASE",
+            rf"EXPORT\s+DATABASE\s+{_QUOTED}\s*"
+            r"(?:\(\s*FORMAT\s+(?P<fmt>\w+)\s*\))?$",
+            _X._export_database,
+            _SELF_COMMITS,
+        ),
+        (
+            "IMPORT DATABASE", rf"IMPORT\s+DATABASE\s+{_QUOTED}$",
+            _X._import_database, _MUTATES | _SELF_COMMITS,
+        ),
+        # materialized views (continuous aggregates, lake/rollup.py)
+        (
+            "CREATE MATERIALIZED VIEW",
+            rf"CREATE\s+(?P<replace>OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+"
+            rf"(?P<name>{_IDENT})\s+AS\s+(?P<body>.*)$",
+            _X._create_mv,
+            _MUTATES | _SELF_COMMITS,
+        ),
+        (
+            "REFRESH MATERIALIZED VIEW",
+            rf"REFRESH\s+MATERIALIZED\s+VIEW\s+(?P<name>{_IDENT})$",
+            _X._refresh_mv,
+            _MUTATES | _SELF_COMMITS,
+        ),
+        (
+            "DROP MATERIALIZED VIEW",
+            rf"DROP\s+MATERIALIZED\s+VIEW\s+(?P<ifx>IF\s+EXISTS\s+)?"
+            rf"(?P<name>{_IDENT})$",
+            _X._drop_mv,
+            _MUTATES,
+        ),
+        # views and tables (demos/03_schema_evolution)
+        (
+            "CREATE VIEW",
+            rf"CREATE\s+(?P<replace>OR\s+REPLACE\s+)?VIEW\s+"
+            rf"(?P<name>{_IDENT})\s+AS\s+(?P<body>.*)$",
+            _X._create_view,
+            _MUTATES,
+        ),
+        (
+            "DROP VIEW",
+            rf"DROP\s+VIEW\s+(?P<ifx>IF\s+EXISTS\s+)?(?P<name>{_IDENT})$",
+            _X._drop_view,
+            _MUTATES,
+        ),
+        (
+            "CREATE TABLE AS",
+            rf"CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+{_T}"
+            r"(?:\s+PARTITION\s+BY\s*\((?P<pby>[^()]+)\))?\s+AS\s+"
+            r"(?P<body>.*)$",
+            _X._ctas,
+            _MUTATES,
+        ),
+        (
+            # the lazy coldef group stops before an optional PARTITION BY
+            "CREATE TABLE",
+            rf"CREATE\s+TABLE\s+(?P<ifnot>IF\s+NOT\s+EXISTS\s+)?{_T}\s*"
+            r"\((?P<cols>.*?)\)\s*"
+            r"(?:PARTITION\s+BY\s*\((?P<pby>[^()]+)\)\s*)?$",
+            _X._create_table,
+            _MUTATES,
+        ),
+        (
+            "DROP TABLE",
+            rf"DROP\s+TABLE\s+(?P<ifx>IF\s+EXISTS\s+)?{_T}$",
+            _X._drop_table,
+            _MUTATES,
+        ),
+        (
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+ADD\s+COLUMN\s+(?P<col>{_IDENT})\s+"
+            r"(?P<typ>[A-Za-z0-9_]+(?:\s*\([^)]*\))?)"
+            r"(?:\s+DEFAULT\s+(?P<dflt>.+?))?$",
+            _X._add_column,
+            _MUTATES,
+        ),
+        (
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+DROP\s+COLUMN\s+(?P<col>{_IDENT})$",
+            _tx_op(lambda tx, m: tx.drop_column(m["name"], m["col"])),
+            _MUTATES,
+        ),
+        (
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+RENAME\s+COLUMN\s+(?P<col>{_IDENT})"
+            rf"\s+TO\s+(?P<new>{_IDENT})$",
+            _tx_op(
+                lambda tx, m: tx.rename_column(m["name"], m["col"], m["new"])
+            ),
+            _MUTATES,
+        ),
+        (
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+ALTER\s+COLUMN\s+(?P<col>{_IDENT})\s+"
+            r"SET\s+NOT\s+NULL$",
+            _tx_op(lambda tx, m: tx.set_not_null(m["name"], m["col"])),
+            _MUTATES,
+        ),
+        (
+            # SET/RESET — metadata-only spec edits (X2 clustering)
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+(?:SET\s+PARTITIONED\s+BY\s*"
+            r"\((?P<cols>[^()]*)\)|RESET\s+PARTITIONED\s+BY)\s*$",
+            _tx_op(
+                lambda tx, m: tx.set_partition_by(
+                    m["name"], _col_list(m["cols"])
+                )
+            ),
+            _MUTATES,
+        ),
+        (
+            # CALL optimize applies the z-order spec, compact() re-applies
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+(?:SET\s+ZORDER\s+BY\s*"
+            r"\((?P<cols>[^()]*)\)|RESET\s+ZORDER\s+BY)\s*$",
+            _tx_op(
+                lambda tx, m: tx.set_zorder_by(m["name"], _col_list(m["cols"]))
+            ),
+            _MUTATES,
+        ),
+        (
+            # widening casts only — the reference's "change data types"
+            # claim, README.md:50; old files cast at read time
+            "ALTER TABLE",
+            rf"ALTER\s+TABLE\s+{_T}\s+ALTER\s+COLUMN\s+(?P<col>{_IDENT})\s+"
+            r"(?:SET\s+DATA\s+)?TYPE\s+"
+            r"(?P<typ>[A-Za-z0-9_]+(?:\s*\([^)]*\))?)$",
+            _tx_op(
+                lambda tx, m: tx.alter_column_type(
+                    m["name"], m["col"], _map_type(m["typ"])
+                )
+            ),
+            _MUTATES,
+        ),
+        # introspection
+        (
+            "SUMMARIZE", r"SUMMARIZE\s+(?P<body>.+)$", _X._summarize_stmt, 0,
+        ),
+        (
+            "DESCRIBE",
+            rf"(?:DESCRIBE|DESC)\s+{_T}$",
+            _X._describe_table,
+            0,
+        ),
+        (
+            "DESCRIBE",
+            r"(?:DESCRIBE|DESC)\s+(?P<body>(?:SELECT|WITH|FROM)\b.*)$",
+            _X._describe_query,
+            0,
+        ),
+        (
+            "PRAGMA",
+            rf"PRAGMA\s+table_info\s*\(\s*'?{_T}'?\s*\)$",
+            _X._describe_table,
+            0,
+        ),
+        (
+            "SHOW TABLES",
+            r"(?:SHOW\s+TABLES|PRAGMA\s+show_tables)$",
+            _X._show_tables,
+            0,
+        ),
+        # DML (demo 01:58-102, demos/02_time_travel)
+        (
+            "CHECKPOINT",
+            rf"CHECKPOINT(?:\s+(?P<cat>{_IDENT})\s*\.\s*"
+            rf"(?P<name>{_IDENT}))?$",
+            _X._checkpoint,
+            _MUTATES,
+        ),
+        (
+            "CHECKPOINT", rf"CHECKPOINT\s+(?P<name>{_IDENT})$",
+            _X._checkpoint_name, 0,
+        ),
+        (
+            "INSERT",
+            r"INSERT\s+(?:OR\s+(?P<mode>REPLACE|IGNORE)\s+)?INTO\s+"
+            rf"{_T}\s*(?P<body>.*)$",
+            _X._insert,
+            _MUTATES,
+        ),
+        (
+            "UPDATE", rf"UPDATE\s+{_T}\s+SET\s+(?P<body>.*)$", _X._update,
+            _MUTATES,
+        ),
+        (
+            "DELETE",
+            rf"DELETE\s+FROM\s+{_T}(?:\s+WHERE\s+(?P<where>.*))?$",
+            _X._delete,
+            _MUTATES,
+        ),
+        (
+            # DuckDB's spelling of the full-table DELETE: the engine's
+            # no-WHERE delete is metadata-only (files marked removed)
+            "TRUNCATE",
+            rf"TRUNCATE\s+(?:TABLE\s+)?{_T}$",
+            _tx_op(lambda tx, m: tx.delete(m["name"], None)),
+            _MUTATES,
+        ),
+        (
+            "MERGE",
+            r"MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
+            rf"{_T}(?P<rest>.*)$",
+            _X._merge_stmt,
+            _MUTATES,
+        ),
+        # maintenance procedures: each resolves its own target
+        (
+            "CALL",
+            rf"CALL\s+(?P<fn>{_IDENT})\s*\((?P<args>.*)\)$",
+            _X._call_stmt,
+            _SELF_COMMITS,
+        ),
+        # COPY TO writes external files, which no transaction covers;
+        # COPY FROM is an INSERT through the normal transactional path
+        (
+            "COPY",
+            rf"COPY\s+(?P<src>\(.*\)|{_IDENT})\s+TO\s+{_QUOTED}"
+            r"\s*(?:\(\s*(?P<opts>.*?)\s*\))?$",
+            _X._copy_stmt,
+            _SELF_COMMITS,
+        ),
+        (
+            "COPY",
+            rf"COPY\s+(?P<name>{_IDENT})\s+FROM\s+{_QUOTED}"
+            r"\s*(?:\(\s*(?P<opts>.*?)\s*\))?$",
+            _X._copy_from_stmt,
+            _MUTATES,
+        ),
+        ("COPY", r"COPY\b", _bad_copy, 0),
+    ]
+]

@@ -656,7 +656,13 @@ def probe_vector_index(
         """[(query_id, centroid_id)] probe pairs under the canonical
         ordering — driver-ranked iff the metadata row count is bounded."""
         if rows <= _COARSE_THRESHOLD:
-            cpdf = df.select("vec_id", "e").toPandas()
+            # probe_lookup's stable sort breaks cosine ties by row order:
+            # sort by id so ties go to the lowest centroid id, as in _topk
+            cpdf = (
+                df.select("vec_id", "e")
+                .toPandas()
+                .sort_values("vec_id", ignore_index=True)
+            )
             if not len(cpdf):
                 return []
             return [

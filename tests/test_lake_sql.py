@@ -515,11 +515,6 @@ def test_materialized_view_sql_errors(lake):
             "CREATE MATERIALIZED VIEW ok AS "
             "SELECT k, COUNT(*) FROM src GROUP BY k"
         )
-    # MV DDL commits snapshots of its own -> refused inside explicit txns
-    lake.sql("BEGIN")
-    with pytest.raises(LakeSQLError, match="explicit transaction"):
-        lake.sql("REFRESH MATERIALIZED VIEW ok")
-    lake.sql("ROLLBACK")
     # SUM(*)/AVG(*)/MIN(*)/MAX(*) are parse errors, not deep CTAS blowups
     with pytest.raises(LakeSQLError, match=r"SUM\(\*\)"):
         lake.sql(
@@ -1290,9 +1285,6 @@ def test_call_maintenance_statements(lake):
     ) == [0, 1, 2, 3]
     with pytest.raises(Exception, match="unknown procedure"):
         lake.sql("CALL frobnicate(1)")
-    with pytest.raises(Exception, match="cannot run inside"):
-        lake.sql("BEGIN")
-        lake.sql("CALL gc()")
 
 
 def test_filtered_materialized_view_sql(lake):
@@ -2339,11 +2331,6 @@ def test_copy_to_single_file_and_directory(lake, spark, tmp_path):
         lake.sql(f"COPY t TO '{d}'")
     lake.sql(f"COPY t TO '{d}' (OVERWRITE)")
     assert spark.read.parquet(d).count() == 3
-    # not transactional -> refused inside BEGIN
-    lake.sql("BEGIN")
-    with pytest.raises(LakeSQLError, match="explicit transaction"):
-        lake.sql(f"COPY t TO '{str(tmp_path / 'x.parquet')}'")
-    lake.sql("ROLLBACK")
     with pytest.raises(LakeSQLError, match="unsupported COPY format"):
         lake.sql(f"COPY t TO '{p}' (FORMAT JSON)")
 
@@ -2560,11 +2547,6 @@ def test_attach_cross_catalog_sql(lake, spark, tmp_path):
         lake.sql("SELECT * FROM prod.prices").collect()
     with pytest.raises(LakeSQLError, match="no attached catalog"):
         lake.sql("COPY FROM DATABASE nope TO dev")
-    # not allowed inside an explicit transaction
-    lake.sql("BEGIN")
-    with pytest.raises(LakeSQLError, match="explicit transaction"):
-        lake.sql(f"ATTACH '{tgt_path}' AS p2")
-    lake.sql("ROLLBACK")
 
 
 def test_attached_catalog_writes(lake, spark, tmp_path):
@@ -2633,11 +2615,15 @@ def test_attached_catalog_writes(lake, spark, tmp_path):
     )
     assert prod.count("notes") == 2
 
-    # refused inside an open main transaction (one write target per txn)
-    lake.sql("BEGIN")
-    with pytest.raises(LakeSQLError, match="explicit transaction"):
-        lake.sql("INSERT INTO prod.notes VALUES (9, 'q')")
-    lake.sql("ROLLBACK")
+    # a write naming no attached catalog is a pointed error, never a
+    # statement handed on to Spark's own catalog
+    for stmt in [
+        "INSERT INTO nope.notes VALUES (1, 'x')",
+        "DROP TABLE default.notes",
+        "CREATE TABLE nope.t AS SELECT 1 AS x",
+    ]:
+        with pytest.raises(LakeSQLError, match="no attached catalog"):
+            lake.sql(stmt)
 
     # fresh bind of the attached path reads back identical state
     lake.sql("DETACH prod")
@@ -2791,6 +2777,33 @@ def test_attach_read_only(lake, spark, tmp_path):
     assert lake.sql("SELECT count(*) AS n FROM t").collect()[0]["n"] == 2
     with pytest.raises(LakeSQLError, match="READ_ONLY"):
         lake.sql("DELETE FROM t")
+    # every other writing statement is refused before it runs, too
+    for stmt in [
+        "CREATE TABLE t2 (y INT)",
+        "CREATE TABLE t2 AS SELECT * FROM t",
+        "DROP TABLE t",
+        "ALTER TABLE t ADD COLUMN y INT",
+        "ALTER TABLE t DROP COLUMN x",
+        "ALTER TABLE t RENAME COLUMN x TO z",
+        "ALTER TABLE t ALTER COLUMN x SET NOT NULL",
+        "ALTER TABLE t ALTER COLUMN x TYPE BIGINT",
+        "ALTER TABLE t SET PARTITIONED BY (x)",
+        "ALTER TABLE t RESET ZORDER BY",
+        "CREATE VIEW v AS SELECT * FROM t",
+        "DROP VIEW IF EXISTS v",
+        "CREATE MATERIALIZED VIEW mv2 AS SELECT count(*) AS n_rows FROM t",
+        "DROP MATERIALIZED VIEW mv",
+        "UPDATE t SET x = 0",
+        "TRUNCATE t",
+        "INSERT OR REPLACE INTO t VALUES (1)",
+        "MERGE INTO t USING (SELECT 1 AS x) s ON t.x = s.x "
+        "WHEN MATCHED THEN DELETE",
+        "CHECKPOINT t",
+        "CALL flush_inlined(t)",
+        f"COPY t FROM '{tmp_path}/rows.parquet'",
+    ]:
+        with pytest.raises(LakeSQLError, match="'ro' is attached READ_ONLY"):
+            lake.sql(stmt)
     # REFRESH mutates (MV rewrite + meta restamp): blocked under USE too
     with pytest.raises(LakeSQLError, match="READ_ONLY"):
         lake.sql("REFRESH MATERIALIZED VIEW mv")
@@ -2842,6 +2855,47 @@ def test_use_attached_default_catalog(lake, spark, tmp_path):
     lake.sql("USE prod")
     lake.sql("DETACH prod")  # in-use catalog detached -> bound default
     assert lake.sql("SELECT count(*) AS n FROM local_only").collect()[0]["n"] == 0
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "ATTACH '{tmp}/other' AS other",
+        "DETACH att",
+        "COPY FROM DATABASE main TO att",
+        "EXPORT DATABASE '{tmp}/exp'",
+        "IMPORT DATABASE '{tmp}/exp'",
+        "CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS n_rows FROM t",
+        "REFRESH MATERIALIZED VIEW mv",
+        "CALL gc()",
+        "COPY t TO '{tmp}/x.parquet'",
+        "USE att",
+        # writes into an attached catalog autocommit there: one write
+        # target per transaction
+        "INSERT INTO att.t VALUES (9)",
+        "MERGE INTO att.t USING t s ON t.x = s.x WHEN MATCHED THEN DELETE",
+        "CHECKPOINT att.t",
+        "CHECKPOINT att",
+    ],
+)
+def test_self_committing_statements_refused_in_txn(
+    lake, spark, tmp_path, stmt
+):
+    """Statements that commit snapshots (or files) of their own are
+    refused inside BEGIN, which stays usable and commits its own work."""
+    att = LakeCatalog(str(tmp_path / "att"), spark)
+    att.sql("CREATE TABLE t (x INT)")
+    lake.sql("CREATE TABLE t (x INT)")
+    lake.sql(f"ATTACH '{tmp_path}/att' AS att")
+    lake.sql("BEGIN")
+    lake.sql("INSERT INTO t VALUES (1)")
+    with pytest.raises(LakeSQLError, match="explicit transaction"):
+        lake.sql(stmt.format(tmp=tmp_path))
+    lake.sql("COMMIT")
+    assert lake.count("t") == 1 and att.count("t") == 0
+    assert [r["name"] for r in lake.sql("SHOW DATABASES").collect()] == [
+        "main", "att"
+    ]
 
 
 def test_attached_merge_full_surface(lake, spark, tmp_path):

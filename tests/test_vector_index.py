@@ -977,3 +977,43 @@ def test_quantized_index_excludes_dirty_vectors(spark, tmp_path, vectors):
     )
     got = [r["vec_id"] for r in lake.read("qi").filter("vec_id >= 9100000").collect()]
     assert got == [9_100_000]
+
+
+def test_probe_centroid_tie_is_order_free(spark, tmp_path, monkeypatch):
+    """A cosine tie between centroids breaks to the lowest centroid id on
+    BOTH ranking paths, whatever order the lake returns the centroid rows
+    in: the driver rank (centroid read <= _COARSE_THRESHOLD rows) and the
+    distributed _topk rank (threshold forced to 0) probe the same bucket.
+    Centroids 0 and 1 point the same way; the centroid table is stored in
+    descending id order, so an unsorted driver rank would probe bucket 1."""
+    from ducktales_spark import vector_index as vx
+
+    lake = LakeCatalog(str(tmp_path / "lake"), spark, inline_threshold=0)
+    cents = [(2, [0.0, 1.0]), (1, [2.0, 0.0]), (0, [1.0, 0.0])]
+    lake.ctas(
+        "tie_idx__centroids",
+        spark.createDataFrame(cents, "vec_id bigint, e array<double>")
+        .coalesce(1),
+    )
+    lake.ctas(
+        "tie_idx",
+        spark.createDataFrame(
+            [(10, [1.0, 0.1], 0), (11, [1.0, 0.2], 1), (12, [0.0, 1.0], 2)],
+            "vec_id bigint, e array<double>, centroid_id bigint",
+        ),
+    )
+    assert [r["vec_id"] for r in lake.read("tie_idx__centroids").collect()] == [
+        2, 1, 0
+    ]
+    queries = pd.DataFrame({"vec_id": [100], "e": [[1.0, 0.0]]})
+
+    def probe():
+        return _rows(
+            vx.probe_vector_index(lake, "tie_idx", queries, k=1, nprobe=1)
+        )
+
+    driver = probe()
+    monkeypatch.setattr(vx, "_COARSE_THRESHOLD", 0)
+    distributed = probe()
+    assert driver == distributed
+    assert [r[1] for r in driver] == [10]  # bucket 0: the lowest tied id

@@ -429,6 +429,33 @@ class LakeCatalog:
             raise LakeError(f"table {name!r} does not exist at version {v}")
         return row
 
+    def _live_entries(self, table_id: int, v: int):
+        """-> (files, inlined): the data-file and inlined-row entries of
+        ``table_id`` live at snapshot ``v`` (added at or before ``v``, not
+        removed by then). Entries are immutable once committed — a change
+        removes an entry and adds a new one — so an entry's id names the
+        same rows at every version it is live in."""
+        files = [
+            FileEntry(*r)
+            for r in self.ms.q(
+                "SELECT file_id, path, row_count, file_bytes, schema_version, "
+                "col_stats FROM lake_data_file WHERE table_id=? AND "
+                "added_snapshot<=? AND (removed_snapshot IS NULL OR "
+                "removed_snapshot>?)",
+                (table_id, v, v),
+            )
+        ]
+        inlined = [
+            InlinedEntry(*r)
+            for r in self.ms.q(
+                "SELECT row_id, schema_version, row_json FROM lake_inlined "
+                "WHERE table_id=? AND added_snapshot<=? AND "
+                "(removed_snapshot IS NULL OR removed_snapshot>?)",
+                (table_id, v, v),
+            )
+        ]
+        return files, inlined
+
     def _schemas_at(self, table_id: int, v: int):
         rows = self.ms.q(
             "SELECT schema_version, schema_json FROM lake_schema WHERE "
@@ -471,25 +498,7 @@ class LakeCatalog:
         table_id, _ = self._table_at(name, v)
         schemas = self._schemas_at(table_id, v)
         current = schemas[max(schemas)]
-        files = [
-            FileEntry(*r)
-            for r in self.ms.q(
-                "SELECT file_id, path, row_count, file_bytes, schema_version, "
-                "col_stats FROM lake_data_file WHERE table_id=? AND "
-                "added_snapshot<=? AND (removed_snapshot IS NULL OR "
-                "removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
-        inlined = [
-            InlinedEntry(*r)
-            for r in self.ms.q(
-                "SELECT row_id, schema_version, row_json FROM lake_inlined "
-                "WHERE table_id=? AND added_snapshot<=? AND "
-                "(removed_snapshot IS NULL OR removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
+        files, inlined = self._live_entries(table_id, v)
         if where is not None:
             conjuncts = parse_conjuncts(where)
             # pruning resolves predicate names against the CURRENT schema:
@@ -644,14 +653,9 @@ class LakeCatalog:
         current = schemas[max(schemas)]
         fid_to_name = {f.field_id: f.name for f in current.fields}
         out = []
-        for path, rc, fb, cs in self.ms.q(
-            "SELECT path, row_count, file_bytes, col_stats FROM "
-            "lake_data_file WHERE table_id=? AND added_snapshot<=? AND "
-            "(removed_snapshot IS NULL OR removed_snapshot>?)",
-            (table_id, v, v),
-        ):
+        for fe in self._live_entries(table_id, v)[0]:
             cols = {}
-            for fid, st in (json.loads(cs) if cs else {}).items():
+            for fid, st in json.loads(fe.col_stats or "{}").items():
                 col = fid_to_name.get(int(fid))
                 if col is not None:
                     cols[col] = {
@@ -661,9 +665,9 @@ class LakeCatalog:
                     }
             out.append(
                 {
-                    "path": path,
-                    "row_count": rc,
-                    "file_bytes": fb,
+                    "path": fe.path,
+                    "row_count": fe.row_count,
+                    "file_bytes": fe.file_bytes,
                     "columns": cols,
                 }
             )
@@ -710,37 +714,73 @@ class LakeCatalog:
         )
 
     def table_changes(self, name: str, v1: int, v2: int) -> DataFrame:
-        """``ducklake_table_changes`` (T4): row-level diff between versions via
-        ``exceptAll`` (``utils/ducklake_utils.py:65-78``). Columns = the v2
-        schema restricted to FIELDS that also exist at v1 — matched by
-        field id and served under the v2 names/types, so the diff stays
-        correct across RENAME (same id, new name) and widening TYPE
-        changes (v1 side cast to the v2 type — exact for every cast the
-        user-facing widening gate admits; engine-forced retypes of rollup
-        STATE columns are not diffed through this path). A name-based
-        intersection would silently drop renamed
-        columns from the diff — and with them every rollup refresh that
-        crosses the rename snapshot."""
-        d1, d2 = self.read(name, version=v1), self.read(name, version=v2)
+        """``ducklake_table_changes`` (T4): row-level diff between versions
+        (``utils/ducklake_utils.py:65-78``), computed at FILE level.
 
-        def _schema_at(v: int):
-            tid, _ = self._table_at(name, v)
-            schemas = self._schemas_at(tid, v)
-            return schemas[max(schemas)]
+        Data-file and inlined entries are immutable (a change removes an
+        entry and adds a new one), so an entry live at both versions adds
+        the same rows to both sides and cancels out of the multiset
+        difference: (A+C) - (B+C) = A - B. Only the entries live at exactly
+        one of the two versions are read, and the two sides are
+        ``exceptAll``-ed — which still cancels rows that a rewrite carried
+        over unchanged (UPDATE, compact, flush_inlined). When one side has
+        no entries (append-only or delete-only history) the other side is
+        the diff and no ``exceptAll`` runs, so an append diff scans only the
+        appended files: a streaming refresh costs O(changed files), never
+        O(table).
 
-        by_id1 = {f.field_id: f for f in _schema_at(v1).fields}
+        Columns = the v2 schema restricted to FIELDS that also exist at v1
+        — matched by field id and served under the v2 names/types, so the
+        diff stays correct across RENAME (same id, new name) and widening
+        TYPE changes (v1 side cast to the v2 type — exact for every cast
+        the user-facing widening gate admits; engine-forced retypes of
+        rollup STATE columns are not diffed through this path). A
+        name-based intersection would silently drop renamed columns from
+        the diff — and with them every rollup refresh that crosses the
+        rename snapshot."""
+        sides = []
+        for v in (v1, v2):
+            v = self._resolve_version(v)
+            table_id, _ = self._table_at(name, v)
+            schemas = self._schemas_at(table_id, v)
+            sides.append((schemas, *self._live_entries(table_id, v)))
+        (s1, files1, inl1), (s2, files2, inl2) = sides
+        cur1, cur2 = s1[max(s1)], s2[max(s2)]
+        by_id1 = {f.field_id: f for f in cur1.fields}
         pairs = [
             (by_id1[f.field_id].name, f)
-            for f in _schema_at(v2).fields
+            for f in cur2.fields
             if f.field_id in by_id1
         ]
-        p1 = d1.select(
-            *[F.col(a).cast(f.type).alias(f.name) for a, f in pairs]
-        )
-        p2 = d2.select(*[f.name for _, f in pairs])
-        ins = p2.exceptAll(p1).withColumn("change_type", F.lit("insert"))
-        dele = p1.exceptAll(p2).withColumn("change_type", F.lit("delete"))
-        return ins.unionByName(dele)
+        # entries live at both versions cancel; a DROP + re-CREATE gives
+        # the name a new table whose entries share no ids with the old one's
+        common_f = {fe.file_id for fe in files1} & {fe.file_id for fe in files2}
+        common_i = {ie.row_id for ie in inl1} & {ie.row_id for ie in inl2}
+
+        def side(schemas, files, inlined, cols):
+            files = [fe for fe in files if fe.file_id not in common_f]
+            inlined = [ie for ie in inlined if ie.row_id not in common_i]
+            if not files and not inlined:
+                return None
+            return self._build_df(
+                files, inlined, schemas, schemas[max(schemas)]
+            ).select(*cols)
+
+        p1 = side(s1, files1, inl1, [
+            F.col(a).cast(f.type).alias(f.name) for a, f in pairs
+        ])
+        p2 = side(s2, files2, inl2, [f.name for _, f in pairs])
+        if p1 is not None and p2 is not None:
+            p1, p2 = p1.exceptAll(p2), p2.exceptAll(p1)
+        elif p1 is None and p2 is None:
+            p2 = self._build_df([], [], s2, cur2).select(
+                *[f.name for _, f in pairs]
+            )
+        return reduce(DataFrame.unionByName, [
+            df.withColumn("change_type", F.lit(kind))
+            for df, kind in ((p2, "insert"), (p1, "delete"))
+            if df is not None
+        ])
 
     # ------------------------------------------------------------------
     # session bind + maintenance
@@ -1062,25 +1102,7 @@ class Transaction:
                 raise
             return None  # type: ignore[return-value]
         schemas = self.c._schemas_at(table_id, v)
-        files = [
-            FileEntry(*r)
-            for r in self.c.ms.q(
-                "SELECT file_id, path, row_count, file_bytes, schema_version, "
-                "col_stats FROM lake_data_file WHERE table_id=? AND "
-                "added_snapshot<=? AND (removed_snapshot IS NULL OR "
-                "removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
-        inlined = [
-            InlinedEntry(*r)
-            for r in self.c.ms.q(
-                "SELECT row_id, schema_version, row_json FROM lake_inlined "
-                "WHERE table_id=? AND added_snapshot<=? AND "
-                "(removed_snapshot IS NULL OR removed_snapshot>?)",
-                (table_id, v, v),
-            )
-        ]
+        files, inlined = self.c._live_entries(table_id, v)
         st = TableState(
             name=name,
             table_id=table_id,
@@ -2091,13 +2113,16 @@ class Transaction:
         a silent DDL.
 
         Scale path: the source's per-key min/max bounds prune the candidate
-        file list exactly like UPDATE/DELETE (stats.py), then a key-column
-        semi-join tagged with input_file_name() shrinks the rewrite to the
-        files that actually CONTAIN a matched key — so merging into a table
-        clustered on a different column than the merge key (where min/max
-        ranges prune nothing) still rewrites only the truly hit files. One
-        shuffle join over hit candidates + source; untouched files never
-        rewritten."""
+        file list exactly like UPDATE/DELETE (stats.py). Then ONE action
+        left-joins the source key counts to a key-column scan of the
+        candidates tagged with input_file_name() (inlined rows with a
+        sentinel tag), and returns the duplicate-key check, ``matched``,
+        the unmatched count and the set of files that actually CONTAIN a
+        matched key — so merging into a table clustered on a different
+        column than the merge key (where min/max ranges prune nothing)
+        still rewrites only the truly hit files, without a second scan to
+        find them. One shuffle join over hit files + source; untouched
+        files never rewritten."""
         if when_matched not in ("update", "delete", "skip"):
             raise LakeError(f"bad when_matched {when_matched!r}")
         if when_not_matched not in ("insert", "skip"):
@@ -2394,22 +2419,31 @@ class Transaction:
                 st.coarse_write = True
             else:
                 st.read_ranges.append({"conjuncts": list(conjuncts)})
-            target = self.c._build_df(candidates, touched_inlined, st.schemas, sch)
-            # One action answers dup-key check + matched + unmatched: src keys
-            # left-join per-key target counts, then a global aggregate.
-            # `matched` counts TARGET rows hit (PK-less targets may hold
-            # duplicate keys); `inserted` is the anti-join count, NOT
-            # src.count()-matched, which goes negative on duplicate targets.
+            # ONE action answers the dup-key check, matched, unmatched AND
+            # the copy-on-write set: src key counts left-join the key-only
+            # scan of the candidates, each target row tagged with its file
+            # (inlined rows with a sentinel no file URI equals). Range
+            # pruning keeps every file whose key min/max spans the source
+            # bounds — on a table clustered on a DIFFERENT column than the
+            # merge key that is ~every file — so only the files that
+            # actually hold a matched key rewrite; the rest, and inlined
+            # rows without a hit, stay EXACTLY in place. `matched` counts
+            # TARGET rows hit (PK-less targets may hold duplicate keys);
+            # `inserted` is the anti-join count, NOT src.count()-matched,
+            # which goes negative on duplicate targets.
             stats = (
                 src.groupBy(*on).agg(F.count(F.lit(1)).alias("_sc"))
                 .join(
-                    target.groupBy(*on).agg(F.count(F.lit(1)).alias("_tc")),
+                    self._key_scan(st, sch, candidates, touched_inlined, on),
                     on, "left",
                 )
                 .agg(
                     F.max("_sc").alias("_dup"),
-                    F.sum("_tc").alias("_matched"),
-                    F.count(F.when(F.col("_tc").isNull(), 1)).alias("_unmatched"),
+                    F.count("__f").alias("_matched"),
+                    F.count(F.when(F.col("__f").isNull(), 1)).alias(
+                        "_unmatched"
+                    ),
+                    F.collect_set("__f").alias("_hits"),
                 )
                 .first()
             )
@@ -2418,6 +2452,24 @@ class Transaction:
                     f"duplicate merge keys {list(on)} in source"
                 )
             matched = int(stats["_matched"] or 0)
+            hits = set(stats["_hits"] or ())
+            candidates = _files_by_uri(candidates, hits - {_INLINED_TAG})
+            if _INLINED_TAG not in hits:
+                touched_inlined = []
+            if matched and not candidates and not touched_inlined:
+                # Invariant: matched target rows LIVE somewhere. An empty
+                # hit set here means file-identity normalization diverged
+                # between the catalog path and input_file_name() —
+                # proceeding would duplicate every matched row (update) or
+                # silently no-op (delete) while reporting matched=N. Fail
+                # loudly instead.
+                raise LakeError(
+                    "merge internal error: matched rows found but no hit "
+                    "file/inlined entry (file URI normalization mismatch?)"
+                )
+            target = self.c._build_df(
+                candidates, touched_inlined, st.schemas, sch
+            )
             # nmc is the normalized not-matched clause list for BOTH forms
             # (the flat form maps when_not_matched onto it), so it — not
             # the flat flag, which clausal callers never set — decides
@@ -2534,20 +2586,6 @@ class Transaction:
                     res["acted_by_source"] = 0
                 return res
 
-            # Shrink the copy-on-write set to files that actually CONTAIN a
-            # matched key. Range-based candidate pruning keeps every file
-            # whose key min/max spans the source bounds — on a table
-            # clustered on a DIFFERENT column than the merge key (e.g. the
-            # vector index, clustered on centroid_id, merged on vec_id)
-            # that is ~every file, and rewriting a no-hit file just copies
-            # it. One extra key-column-pruned scan (semi-join tagged with
-            # input_file_name) is cheap next to rewriting the table; files
-            # and inlined rows without a hit stay EXACTLY in place. Also
-            # covers matched == 0 inserts: nothing rewrites, the new rows
-            # append.
-            candidates, touched_inlined = self._hit_subset(
-                st, sch, candidates, touched_inlined, src, on, matched
-            )
             if bs_fire:
                 # union the by-source hit set into the rewrite set (a file
                 # can hold both matched and by-source-firing rows; both
@@ -2561,9 +2599,9 @@ class Transaction:
                 touched_inlined = touched_inlined + [
                     ie for ie in bs_inlined if id(ie) not in have_i
                 ]
-            target = self.c._build_df(
-                candidates, touched_inlined, st.schemas, sch
-            )
+                target = self.c._build_df(
+                    candidates, touched_inlined, st.schemas, sch
+                )
             ins_df = None
             # matched rows a clause actually fires on: zero when NO matched
             # clause exists (a by-source-only merge must not count — or
@@ -2746,52 +2784,26 @@ class Transaction:
             for df_ in persisted:
                 df_.unpersist()
 
-    def _hit_subset(
-        self, st, sch, candidates, touched_inlined, src, on, matched
-    ):
-        """Files / inlined entries among the range-pruned candidates that
-        actually hold a row matching a source key (see merge). Key columns
-        only cross the scan; file identity rides ``input_file_name()``."""
-        if not matched:
-            return [], []  # pure-insert merge: rewrite nothing
-        hit_files = candidates
-        if candidates:
-            tagged = self._tagged_scan(st, sch, candidates, cols=on)
-            hit_files = _files_by_uri(candidates, (
-                r["__f"]
-                for r in tagged.join(src.select(*on), on, "left_semi")
-                .select("__f")
-                .distinct()
-                .collect()
-            ))
-        hit_inlined = touched_inlined
-        if touched_inlined:
-            inl = self.c._build_df([], touched_inlined, st.schemas, sch)
-            if (
-                inl.select(*on)
-                .join(src.select(*on), on, "left_semi")
-                .limit(1)
-                .count()
-                == 0
-            ):
-                hit_inlined = []
-        if matched > 0 and not hit_files and not hit_inlined:
-            # Invariant: matched target rows LIVE somewhere. An empty hit
-            # set here means file-identity normalization diverged between
-            # the catalog path and input_file_name() — proceeding would
-            # duplicate every matched row (update) or silently no-op
-            # (delete) while reporting matched=N. Fail loudly instead.
-            raise LakeError(
-                "merge internal error: matched rows found but no hit "
-                "file/inlined entry (file URI normalization mismatch?)"
+    def _key_scan(self, st, sch, files, inlined, on):
+        """Key columns of ``files`` and ``inlined`` rows, each row tagged
+        with its file URI as ``__f`` (inlined rows: ``_INLINED_TAG``) —
+        the scan merge's one stats action joins the source keys to."""
+        parts = []
+        if files:
+            parts.append(self._tagged_scan(st, sch, files, cols=on))
+        if inlined or not parts:
+            parts.append(
+                self.c._build_df([], inlined, st.schemas, sch)
+                .select(*on)
+                .withColumn("__f", F.lit(_INLINED_TAG))
             )
-        return hit_files, hit_inlined
+        return reduce(DataFrame.unionByName, parts)
 
     def _tagged_scan(self, st, sch, files, cols=None):
         """Union-of-schema-versions scan of ``files`` projected to the
         current schema (optionally to ``cols`` only) and tagged with
-        ``input_file_name()`` as ``__f`` — the shared base of the merge
-        legs' hit-/miss-subset scans (one URI-normalization contract)."""
+        ``input_file_name()`` as ``__f`` — the shared base of merge's key
+        scan and miss-subset scan (one URI-normalization contract)."""
         by_sv: dict = {}
         for fe in files:
             by_sv.setdefault(fe.schema_version, []).append(fe.path)
@@ -3288,6 +3300,10 @@ def _clause_chain_expr(clauses):
             F.when(c, F.lit(i)) if chain is None else chain.when(c, F.lit(i))
         )
     return chain.otherwise(F.lit(0)) if chain is not None else F.lit(0)
+
+
+# merge's file tag for inlined rows: NUL never occurs in a file URI
+_INLINED_TAG = "\x00inlined"
 
 
 def _files_by_uri(files, uris):

@@ -10,13 +10,19 @@ TimescaleDB/Materialize continuous-aggregate model, built from this repo's
 own CDC + MERGE primitives instead of a bespoke engine.
 
 Scale shape (100 TB source, say years of events):
-* refresh cost is O(changes since last refresh), never O(source) — the diff
-  aggregates with one shuffle keyed on (bucket, groups);
+* refresh cost is O(files changed since last refresh), never O(source) —
+  ``table_changes`` reads only the data files and inlined rows live at one
+  end of the diff and not the other (an append batch reads just its own
+  file, with no ``exceptAll``), and the diff aggregates with one shuffle
+  keyed on (bucket, groups);
+* one catalog query over the snapshot log decides whether the source
+  changed at all, and one aggregate sizes the upsert and delete legs, so a
+  leg with no rows (the delete leg of every insert-only batch) never runs;
 * the rollup-side read is pruned to the delta's bucket min/max before the
   join (stats-based file skipping turns that into partition pruning on a
   bucket-clustered rollup);
-* the write path is MERGE, which rewrites only files whose key ranges
-  overlap the touched buckets;
+* the write path is MERGE, which rewrites only the files that hold a
+  touched bucket (its one stats pass finds them);
 * only additive aggregates are maintained (count, sum — avg is sum/count at
   read time), because additivity is what makes deletes subtractable. This is
   the same restriction real continuous aggregates impose on their
@@ -562,7 +568,10 @@ def refresh_rollup(lake, name: str) -> dict:
     distinct_cols = _meta_list(m, "distinct_cols")
     var_cols = _meta_list(m, "var_cols")
     v0, v1 = int(m["last_version"]), lake.current_version()
-    if v0 not in {s["snapshot_id"] for s in lake.snapshots()} and v0 < v1:
+    if v1 <= v0:
+        return {"from_version": v0, "to_version": v0, "changed_buckets": 0}
+    log = _snapshot_log(lake, v0, v1)
+    if v0 not in log:
         # The stamped base snapshot was retired by expire_snapshots: the
         # CDC diff (and the partial-recompute bounds derived from it) can
         # no longer be computed, and without this fallback the rollup
@@ -573,7 +582,7 @@ def refresh_rollup(lake, name: str) -> dict:
             lake, name, m, keys, sum_cols, minmax_cols, v0, v1,
             count_cols, approx_cols, distinct_cols, var_cols,
         )
-    if v1 <= v0 or not _src_touched(lake, m["src"], v0, v1):
+    if not _src_touched(log, m["src"], v0):
         # Metadata-only no-op: the snapshot log records which tables each
         # snapshot touched, so a refresh when the source didn't change never
         # walks a row-level diff (and doesn't write a snapshot of its own —
@@ -686,16 +695,25 @@ def refresh_rollup(lake, name: str) -> dict:
             ],
         )
     )
-    merged = merged.persist()  # count + two merges share one execution
+    merged = merged.persist()  # counts + merges share one execution
     try:
-        upserts = merged.filter(F.col("n_rows") > 0)
-        gone = merged.filter(F.col("n_rows") <= 0)
-        n_changed = merged.count()
+        sizes = merged.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("n_rows") > 0, 1)).alias("up"),
+            F.count(F.when(F.col("n_rows") <= 0, 1)).alias("gone"),
+        ).first()
+        n_changed = sizes["n"]
         with lake.transaction() as tx:
-            tx.merge(name, upserts, on=join_keys,
-                     when_matched="update", when_not_matched="insert")
-            tx.merge(name, gone, on=join_keys,
-                     when_matched="delete", when_not_matched="skip")
+            # a leg with no rows is skipped: the delete leg is empty on
+            # every insert-only batch
+            if sizes["up"]:
+                tx.merge(name, merged.filter(F.col("n_rows") > 0),
+                         on=join_keys, when_matched="update",
+                         when_not_matched="insert")
+            if sizes["gone"]:
+                tx.merge(name, merged.filter(F.col("n_rows") <= 0),
+                         on=join_keys, when_matched="delete",
+                         when_not_matched="skip")
             _stamp_meta_tx(tx, lake, name, m, v1)
     finally:
         merged.unpersist()
@@ -706,17 +724,27 @@ def refresh_rollup(lake, name: str) -> dict:
     }
 
 
-def _src_touched(lake, src: str, v0: int, v1: int) -> bool:
-    """True iff any snapshot in (v0, v1] touched ``src`` under ANY change
-    key (created/inserted_into/updated/deleted_from/altered/...; unknown
-    future keys count as touched — a false positive only costs an empty
-    diff walk, a false negative would silently stale the rollup). Read from
-    the snapshot log's changes payload (driver-side scan of the listing; at
-    a scale where snapshots number millions this becomes one SQL filter on
-    the catalog DB, same information)."""
-    for s in lake.snapshots():
-        if v0 < s["snapshot_id"] <= v1:
-            for tables in s["changes"].values():
+def _snapshot_log(lake, v0: int, v1: int) -> dict:
+    """{snapshot_id: changes} for the retained snapshots in [v0, v1] — one
+    catalog query, where ``lake.snapshots()`` issues one per snapshot."""
+    return {
+        sid: json.loads(ch)
+        for sid, ch in lake.ms.q(
+            "SELECT snapshot_id, changes FROM lake_snapshot WHERE "
+            "snapshot_id >= ? AND snapshot_id <= ?",
+            (v0, v1),
+        )
+    }
+
+
+def _src_touched(log: dict, src: str, v0: int) -> bool:
+    """True iff any snapshot of ``log`` after v0 touched ``src`` under ANY
+    change key (created/inserted_into/updated/deleted_from/altered/...;
+    unknown future keys count as touched — a false positive only costs an
+    empty diff walk, a false negative would silently stale the rollup)."""
+    for sid, changes in log.items():
+        if sid > v0:
+            for tables in changes.values():
                 if isinstance(tables, (list, tuple)) and src in tables:
                     return True
     return False
@@ -825,12 +853,15 @@ def _refresh_recompute(
     fresh = regroup.join(touched, join_keys, "inner").persist()
     gone = touched.join(regroup, join_keys, "left_anti").persist()
     try:
-        n_changed = fresh.count() + gone.count()
+        n_fresh, n_gone = fresh.count(), gone.count()
+        n_changed = n_fresh + n_gone
         with lake.transaction() as tx:
-            tx.merge(name, fresh, on=join_keys,
-                     when_matched="update", when_not_matched="insert")
-            tx.merge(name, gone, on=join_keys,
-                     when_matched="delete", when_not_matched="skip")
+            if n_fresh:
+                tx.merge(name, fresh, on=join_keys,
+                         when_matched="update", when_not_matched="insert")
+            if n_gone:
+                tx.merge(name, gone, on=join_keys,
+                         when_matched="delete", when_not_matched="skip")
             _stamp_meta_tx(tx, lake, name, m, v1)
     finally:
         fresh.unpersist()

@@ -283,10 +283,13 @@ def l12_view_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ids=("T4", "T5", "J3"),
 )
 def l14_snapshot_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ducklake_table_changes (T4: row-level diff between two versions via
-    exceptAll, utils/ducklake_utils.py:65-78) driving the snapshot-diff audit
+    """ducklake_table_changes (T4: row-level diff between two versions,
+    utils/ducklake_utils.py:65-78) driving the snapshot-diff audit
     (demos/02_time_travel/demo.py:248-304): iterate consecutive versions and
-    build a change log from row-level diffs."""
+    build a change log from row-level diffs. Each diff reads only the data
+    files that differ between its two versions — the file an UPDATE or
+    DELETE rewrote and the file that replaced it — and ``exceptAll``-s
+    them, so the unchanged rows the rewrite carried over cancel."""
     from functools import reduce
 
     from pyspark.sql import DataFrame as DF

@@ -9,8 +9,11 @@ from __future__ import annotations
 
 import os
 import threading
+from functools import reduce
 
 import pytest
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DecimalType,
@@ -191,6 +194,111 @@ def test_table_changes(lake):
     kinds = {(r["change_type"], r["id"], r["quantity"]) for r in ch}
     assert ("delete", 3, 30) in kinds and ("insert", 3, 25) in kinds
     assert len(ch) == 2  # untouched rows produce no change records
+
+
+def _full_version_changes(lake, name, v1, v2):
+    """The whole-version diff ``table_changes`` used to run: read both
+    versions in full, pair columns by field id, ``exceptAll`` both ways."""
+    def schema_at(v):
+        tid, _ = lake._table_at(name, v)
+        schemas = lake._schemas_at(tid, v)
+        return schemas[max(schemas)]
+
+    by_id1 = {f.field_id: f for f in schema_at(v1).fields}
+    pairs = [
+        (by_id1[f.field_id].name, f)
+        for f in schema_at(v2).fields
+        if f.field_id in by_id1
+    ]
+    p1 = lake.read(name, version=v1).select(
+        *[F.col(a).cast(f.type).alias(f.name) for a, f in pairs]
+    )
+    p2 = lake.read(name, version=v2).select(*[f.name for _, f in pairs])
+    return p2.exceptAll(p1).withColumn("change_type", F.lit("insert")).union(
+        p1.exceptAll(p2).withColumn("change_type", F.lit("delete"))
+    )
+
+
+def test_table_changes_file_level_equals_full_diff(lake, spark):
+    """The file-level diff (only entries live at one end are read) equals
+    the whole-version exceptAll diff, as a multiset, for every pair of
+    versions over a history of file and inlined inserts, UPDATE, DELETE,
+    MERGE, flush_inlined, compact, ADD/RENAME/widening COLUMN and a DROP +
+    re-CREATE of the same name."""
+    from collections import Counter
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(i, f"v{i}", i % 3) for i in range(lo, hi)],
+            "id int, v string, q int",
+        ).coalesce(1)
+
+    lake.create_table("t", StructType([
+        StructField("id", IntegerType(), True),
+        StructField("v", StringType(), True),
+        StructField("q", IntegerType(), True),
+    ]))
+    versions = []
+    steps = [
+        lambda tx: (tx.insert("t", rows(0, 20)),  # a data file
+                    tx.insert_rows("t", [(20, "v20", 2), (21, "v21", 0)])),
+        lambda tx: (tx.update("t", {"q": "q + 10"}, "id % 5 = 0"),
+                    tx.delete("t", "id in (3, 21)")),
+        lambda tx: tx.merge("t", rows(18, 30), on=["id"]),
+        lambda tx: (tx.flush_inlined("t"), tx.compact("t")),
+        lambda tx: (tx.add_column("t", "w", "int", default=7),
+                    tx.rename_column("t", "v", "label"),
+                    tx.alter_column_type("t", "q", "bigint"),
+                    tx.insert_rows("t", [(40, "x", 1, 2)])),
+        lambda tx: (tx.drop_table("t"), tx.create_table("t", StructType([
+            StructField("id", IntegerType(), True),
+            StructField("label", StringType(), True),
+        ])), tx.insert("t", spark.createDataFrame(
+            [(i, "r") for i in range(12)], "id int, label string"))),
+    ]
+    for step in steps:
+        with lake.transaction() as tx:
+            step(tx)
+        versions.append(lake.current_version())
+    for i, v1 in enumerate(versions):
+        for v2 in versions[i + 1:]:
+            # both diffs in one job, tagged: got (g) vs reference (w)
+            both = reduce(DataFrame.unionAll, [
+                d.select(F.lit(tag).alias("s"), F.to_json(F.struct(
+                    *sorted(d.columns))).alias("r"))
+                for tag, d in (
+                    ("g", lake.table_changes("t", v1, v2)),
+                    ("w", _full_version_changes(lake, "t", v1, v2)),
+                )
+            ]).collect()
+            got = Counter(r.r for r in both if r.s == "g")
+            want = Counter(r.r for r in both if r.s == "w")
+            assert got == want, (v1, v2)
+
+
+def test_table_changes_append_reads_only_new_file(lake, spark):
+    """An append-only diff is the appended file itself: no other file is
+    scanned and no exceptAll runs."""
+    df = spark.createDataFrame(
+        [(i, f"p{i}", i, None) for i in range(20)], INV_SCHEMA
+    ).coalesce(1)
+    lake.create_table("inventory", INV_SCHEMA)
+    lake.insert("inventory", df)
+    v1 = lake.current_version()
+    before = set(lake.read("inventory", version=v1).inputFiles())
+    lake.insert("inventory", df)
+    v2 = lake.current_version()
+    added = set(lake.read("inventory", version=v2).inputFiles()) - before
+    assert len(added) == 1
+    ch = lake.table_changes("inventory", v1, v2)
+    assert set(ch.inputFiles()) == added
+    assert "Except" not in ch._jdf.queryExecution().analyzed().toString()
+    assert ch.filter("change_type = 'insert'").count() == 20
+    assert ch.count() == 20
+    # and the reverse (delete-only) direction is the same file as deletes
+    back = lake.table_changes("inventory", v2, v1)
+    assert set(back.inputFiles()) == added
+    assert back.filter("change_type = 'delete'").count() == 20
 
 
 def test_empty_txn_creates_snapshot(lake):
@@ -872,6 +980,60 @@ def test_merge_rewrites_only_files_containing_matches(lake, spark):
     )
     assert res == {"matched": 0, "inserted": 1}
     assert files_before <= set(lake.read("idx").inputFiles())
+
+
+def _file_and_inlined_table(lake, spark):
+    """PK-less ``m``: keys 0..19 in one data file, 100 and 101 inlined."""
+    lake.create_table("m", StructType([
+        StructField("k", IntegerType(), True),
+        StructField("v", StringType(), True),
+    ]))
+    lake.insert("m", spark.createDataFrame(
+        [(i, f"f{i}") for i in range(20)], "k int, v string").coalesce(1))
+    with lake.transaction() as tx:
+        tx.insert_rows("m", [(100, "i100"), (101, "i101")])
+    return set(lake.read("m").inputFiles())
+
+
+def test_merge_hits_only_inlined_rows(lake, spark):
+    """The fused stats pass finds hits among the inlined rows alone: the
+    data file stays in place, the inlined row updates."""
+    files = _file_and_inlined_table(lake, spark)
+    res = lake.merge("m", spark.createDataFrame(
+        [(101, "u"), (500, "n")], "k int, v string"), on=["k"])
+    assert res == {"matched": 1, "inserted": 1}
+    assert files <= set(lake.read("m").inputFiles())
+    got = dict((r.k, r.v) for r in lake.read("m").collect())
+    assert got[101] == "u" and got[100] == "i100" and got[500] == "n"
+    assert got[5] == "f5" and len(got) == 23
+
+
+def test_merge_hits_files_and_inlined_rows(lake, spark):
+    """Hits in a data file and in the inlined rows in one merge: both are
+    rewritten, matched counts target rows across both."""
+    files = _file_and_inlined_table(lake, spark)
+    res = lake.merge("m", spark.createDataFrame(
+        [(5, "u5"), (100, "u100"), (7, None)], "k int, v string"),
+        on=["k"], when_matched="delete", when_not_matched="skip")
+    assert res == {"matched": 3, "inserted": 0}
+    assert not files & set(lake.read("m").inputFiles())  # the hit file
+    got = dict((r.k, r.v) for r in lake.read("m").collect())
+    assert sorted(got) == sorted(set(range(20)) - {5, 7} | {101})
+    assert got[101] == "i101"
+
+
+def test_merge_matched_without_hit_file_raises(lake, spark, monkeypatch):
+    """Matched target rows must live in a hit file or inlined row: when the
+    file-URI mapping finds none, merge fails loudly instead of
+    duplicating (update) or dropping nothing (delete)."""
+    import ducktales_spark.lake.catalog as catalog
+
+    _file_and_inlined_table(lake, spark)
+    monkeypatch.setattr(catalog, "_files_by_uri", lambda files, uris: [])
+    with pytest.raises(LakeError, match="matched rows found but no hit"):
+        lake.merge("m", spark.createDataFrame(
+            [(3, "u")], "k int, v string"), on=["k"])
+    assert lake.read("m").filter("k = 3").collect()[0].v == "f3"
 
 
 def test_merge_hot_key_cdc_is_broadcast_not_shuffled(lake, spark):

@@ -99,6 +99,34 @@ def test_bucket_vanishes_when_all_rows_deleted(spark, lake):
     assert all(r[2] > 0 for r in got)  # no zero-count residue rows
 
 
+def test_refresh_runs_only_merge_legs_with_rows(spark, lake, monkeypatch):
+    """An insert-only refresh runs the upsert MERGE alone (its delete leg
+    is empty) and never walks ``lake.snapshots()`` (one snapshot-log query
+    decides). test_bucket_vanishes_when_all_rows_deleted covers the delete
+    leg."""
+    from ducktales_spark.lake.catalog import LakeCatalog, Transaction
+
+    lake.ctas("ev", _mk_events(spark, BASE))
+    create_rollup(lake, "ev_hourly", "ev", "ts", 3600,
+                  keys=("user_id",), sum_cols=("value",))
+    calls = []
+    real_merge = Transaction.merge
+
+    def spy(self, name, source, on, **kw):
+        calls.append(kw.get("when_matched", "update"))
+        return real_merge(self, name, source, on, **kw)
+
+    def no_listing(self):
+        raise AssertionError("refresh listed every snapshot")
+
+    monkeypatch.setattr(Transaction, "merge", spy)
+    monkeypatch.setattr(LakeCatalog, "snapshots", no_listing)
+    lake.insert("ev", _mk_events(spark, [(6, "2024-01-01 07:00:00", 4, 1.0)]))
+    assert refresh_rollup(lake, "ev_hourly")["changed_buckets"] == 1
+    assert calls == ["update"]
+    assert _rows(lake.read("ev_hourly")) == _rows(_recompute(lake))
+
+
 def test_noop_refresh(spark, lake):
     lake.ctas("ev", _mk_events(spark, BASE))
     create_rollup(lake, "ev_hourly", "ev", "ts", 3600,
